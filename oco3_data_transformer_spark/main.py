@@ -161,8 +161,11 @@ def run_batch(spark: SparkSession, cfg: RunConfig, fmt: str = "npz") -> dict:
         by_mission.setdefault(e["mission"], []).append(e["path"])
 
     for mission, paths in by_mission.items():
-        slices = mission_slices(spark, cfg, mission, paths, fmt)
-        appended = store_ops.append(spark, slices, cfg.store_path)
+        # the pipeline's cached rows are released once the append has
+        # materialized the slices
+        with pipe.cached_rows():
+            slices = mission_slices(spark, cfg, mission, paths, fmt)
+            appended = store_ops.append(spark, slices, cfg.store_path)
         report["missions"][mission] = {"rows_appended": appended}
 
     report["verify"] = store_ops.verify(spark, cfg.store_path)

@@ -6,7 +6,7 @@ the scan (verify with ``.explain``: ``PushedFilters`` on the parquet scan).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Mode codes, ref processors/OCO3SamProcessor.py:37-38 (CO2) and
@@ -65,14 +65,14 @@ def drop_empty_slices(
 ) -> DataFrame:
     """F7: drop output slices whose science variables are all-NaN/null
     (ref utils/dataset_utils.py:21-26, config 'drop-empty' README.md:336-345).
+
+    One ``count(value) over (partition by slice_cols)`` window filter: the
+    input executes once, where a join against an aggregate of itself would
+    run the input's plan on both sides.
     """
-    counts = df.groupBy(*slice_cols).agg(
-        *[F.count(F.col(c)).alias(f"__n_{c}") for c in value_cols]
-    )
-    nonempty = counts.filter(
-        sum((F.col(f"__n_{c}") for c in value_cols), F.lit(0)) > 0
-    ).select(*slice_cols)
-    return df.join(F.broadcast(nonempty), on=slice_cols, how="left_semi")
+    w = Window.partitionBy(*slice_cols)
+    n = sum((F.count(F.col(c)).over(w) for c in value_cols), F.lit(0))
+    return df.withColumn("__n_values", n).filter(F.col("__n_values") > 0).drop("__n_values")
 
 
 def time_range(df: DataFrame, time_col: str, start, end) -> DataFrame:

@@ -326,24 +326,6 @@ def footprint_cell_hits(
            "fp_min_lat", "fp_max_lat", "v_lon", "v_lat")
 
 
-def mask_cells_by_footprints(
-    cells: DataFrame,
-    footprints: DataFrame,
-    region_keys: list[str],
-    cell_half_lon: float,
-    cell_half_lat: float,
-    scale_factor: float = 1.0,
-) -> DataFrame:
-    """G6/J4: keep grid cells whose cell box intersects >= 1 sounding
-    footprint of the same region — left-semi over :func:`footprint_cell_hits`
-    (one surviving footprint is enough)."""
-    hits = footprint_cell_hits(
-        cells, footprints, region_keys, cell_half_lon, cell_half_lat, scale_factor
-    )
-    mask_cells = hits.select(*region_keys, "lat_idx", "lon_idx").distinct()
-    return cells.join(mask_cells, [*region_keys, "lat_idx", "lon_idx"], "left_semi")
-
-
 def first_wins_rasterize(
     masked_cells: DataFrame,
     pixel_keys: list[str],

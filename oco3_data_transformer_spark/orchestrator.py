@@ -33,6 +33,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .plans import pipeline as pipe
 from .sinks import store as store_ops
 
 FEATURES_SCHEMA = "granule string, mission string, day date"
@@ -166,16 +167,19 @@ def run_deploy(
     if not append_days and not repair_days:
         return report
 
+    # each write releases the rows its transform's pipelines cached
     if append_days:
         batch = features.filter(F.col("day").isin(append_days))
-        slices = transform(batch)
-        report["rows_appended"] = store_ops.append(spark, slices, cfg.store_path)
+        with pipe.cached_rows():
+            slices = transform(batch)
+            report["rows_appended"] = store_ops.append(spark, slices, cfg.store_path)
     if repair_days:
         # re-stage ALL granules of the repaired days (the reference re-adds
         # previously processed collections, ref run.py:315-331) so the
         # partition-scoped overwrite rebuilds the complete day
         batch = features.filter(F.col("day").isin(repair_days))
-        report["rows_repaired"] = store_ops.upsert(spark, transform(batch), cfg.store_path)
+        with pipe.cached_rows():
+            report["rows_repaired"] = store_ops.upsert(spark, transform(batch), cfg.store_path)
 
     done_days = [*append_days, *repair_days]
     new_ledger = (

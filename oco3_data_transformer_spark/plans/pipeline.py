@@ -8,10 +8,22 @@ Differences from the reference that are architecture, not semantics:
   - the backup/verify/repair machinery is replaced by the sink's idempotent
     MERGE-style append (sinks/store.py);
   - pre/post-QF dual output is two branches of one cached frame, not two
-    passes over the files.
+    passes over the files;
+  - a plan runs each Python kernel (the grid ``MapInPandas``, the
+    mask-refine ``ArrowEvalPython``) once per execution: the mask keeps the
+    refined grid rows themselves instead of joining the grid back.
+    ``store.append`` materializes its input once, so a day's kernels run
+    once per append.
+
+The cached row frame lives until the enclosing :func:`cached_rows` scope
+exits; main.run_batch, the orchestrator and the streaming ingest close one
+per write.
 """
 
 from __future__ import annotations
+
+import contextlib
+import contextvars
 
 import numpy as np
 import pandas as pd
@@ -30,6 +42,37 @@ from ..operators.filters import (
     OPERATION_MODE_TARGET,
     SIF_MODE_SAM,
 )
+
+
+# Frames the pipelines persist inside the current cached_rows() scope. A
+# context variable, not shared module state: scopes nest, and each thread
+# (a streaming foreachBatch callback, a concurrent writer) sees only its own.
+_SCOPE: contextvars.ContextVar[list[DataFrame] | None] = contextvars.ContextVar(
+    "cached_rows", default=None
+)
+
+
+@contextlib.contextmanager
+def cached_rows():
+    """Scope for the row frames the mission pipelines cache: each one
+    persisted while the block runs is unpersisted when it exits. Build the
+    slices and write them inside the block; outside any scope the cache
+    stays until the caller clears it."""
+    token = _SCOPE.set([])
+    try:
+        yield
+    finally:
+        for df in _SCOPE.get():
+            df.unpersist()
+        _SCOPE.reset(token)
+
+
+def _persist(df: DataFrame) -> DataFrame:
+    df = df.persist()
+    held = _SCOPE.get()
+    if held is not None:
+        held.append(df)
+    return df
 
 
 def segment_oco3(soundings: DataFrame, margin: int = 2) -> DataFrame:
@@ -113,7 +156,7 @@ def _target_focused_tail(
     rows = join_ops.target_lookup(rows, targets, "target_id")
 
     # F3/F4: pre/post QF split from one cached frame
-    rows = rows.persist()
+    rows = _persist(rows)
     region_cols = ["granule", "mode", "region_id"]
     pre = rows.withColumn("qf", F.lit("pre"))
     post = (
@@ -151,7 +194,10 @@ def _target_focused_tail(
     )
     # mask join is per-region; half-sizes are uniform per region, pass the
     # max as the conservative coarse bound and refine exactly per row
-    masked = _mask_with_row_halves(gridded, footprints, ["qf", *region_cols], mask_scale)
+    masked = _mask_with_row_halves(
+        gridded, footprints, ["qf", *region_cols], [*grid_keys, "lat_idx", "lon_idx"],
+        mask_scale,
+    )
 
     drop_cols = ["min_lon", "min_lat", "max_lon", "max_lat", "__half_lon", "__half_lat"]
     return (
@@ -234,11 +280,22 @@ def process_oco2_granules(
 
 
 def _mask_with_row_halves(
-    gridded: DataFrame, footprints: DataFrame, region_keys: list[str], scale: float
+    gridded: DataFrame,
+    footprints: DataFrame,
+    region_keys: list[str],
+    cell_keys: list[str],
+    scale: float,
 ) -> DataFrame:
-    """Mask variant where cell half-sizes ride on the rows (per-region
-    meshes differ). Same coarse+refine structure as
-    grid_ops.mask_cells_by_footprints."""
+    """G6/J4: keep the grid cells whose box intersects >= 1 footprint of
+    the same region. Cell half-sizes ride on the rows (per-region meshes
+    differ); a bbox band join prefilters the (cell, footprint) pairs and a
+    numpy kernel refines them exactly (as grid_ops.footprint_cell_hits).
+
+    The surviving pairs ARE the kept grid rows: they are projected back
+    onto ``gridded``'s columns and deduplicated on ``cell_keys`` (the grid
+    kernel's full group key plus lat_idx, lon_idx), so ``gridded`` executes
+    once. The region key alone would not do: one region straddling UTC
+    midnight is two grid groups, one per day."""
     from ..operators.geometry import boxes_intersect_polygons, scale_footprint
 
     fp = footprints.select(
@@ -286,9 +343,7 @@ def _mask_with_row_halves(
             F.col("v_lon"), F.col("v_lat"),
         )
     )
-    key = [*region_keys, "lat_idx", "lon_idx"]
-    mask_cells = hits.select(*key).distinct()
-    return gridded.join(mask_cells, key, "left_semi")
+    return hits.select(*gridded.columns).dropDuplicates(cell_keys)
 
 
 def process_oco3_global(
@@ -322,7 +377,7 @@ def process_oco3_global(
         soundings.drop("target_id", "target_name"), regions,
         ["granule"], "sounding_idx", carry_cols=["mode", "target_id"],
     )
-    rows = rows.persist()
+    rows = _persist(rows)
     good = F.col("xco2_quality_flag") == 0
     region_cols = ["granule", "mode", "region_id"]
     pre = rows.withColumn("qf", F.lit("pre"))
@@ -352,26 +407,28 @@ def process_oco3_global(
         F.col("target_id").alias("f_target_id"),
     )
     hits = grid_ops.footprint_cell_hits(
-        gridded.select("qf", "time", "lat_idx", "lon_idx", "lat", "lon"),
-        footprints, ["qf", "time"], half_lon, half_lat, mask_scale,
+        gridded, footprints, ["qf", "time"], half_lon, half_lat, mask_scale,
         carry_cols=["f_granule", "f_mode", "f_region_id", "f_target_id"],
     )
-    # G7: first-writer-wins metadata per pixel. Typed order columns — a
-    # numeric region_id orders numerically (region 2 before 10), matching
-    # the reference's loop order; a string concat would sort '10' < '2'.
-    meta = grid_ops.first_wins_rasterize(
+    # G6 + G7: mask = pixels with >= 1 hit, each carrying the metadata of
+    # its first-writing region. Typed order columns — a numeric region_id
+    # orders numerically (region 2 before 10), matching the reference's
+    # loop order; a string concat would sort '10' < '2'. The pixel's grid
+    # values ride in the same aggregate (every hit of a pixel carries the
+    # same ones), so the grid is not joined back and executes once.
+    pixel = ["qf", "time", "lat_idx", "lon_idx"]
+    out = grid_ops.first_wins_rasterize(
         hits,
-        ["qf", "time", "lat_idx", "lon_idx"],
+        pixel,
         ["f_granule", "f_mode", "f_region_id"],
         [
             F.col("f_target_id").alias("target_id"),
             determine_id_type(F.col("f_target_id")).alias("target_type"),
             F.col("f_mode").alias("operation_mode"),
+            *[c for c in gridded.columns if c not in pixel],
         ],
     )
-    # G6: mask = pixels with >= 1 hit; inner join attaches metadata
-    out = gridded.join(meta, ["qf", "time", "lat_idx", "lon_idx"], "inner")
-    return out
+    return out.select(*gridded.columns, "target_id", "target_type", "operation_mode")
 
 
 def densify_missing_day(

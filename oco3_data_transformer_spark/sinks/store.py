@@ -95,6 +95,11 @@ def append(
     The existing-key anti-join reads only the partitions the incoming batch
     touches (partition filter on day/mission/qf), not the whole store.
 
+    The incoming rows are materialized once (``localCheckpoint``) before
+    their three consumers — the touched-day frame, the anti-join and the
+    count-then-write — so ``df``'s plan (for a mission pipeline: the grid
+    kernel and the footprint mask) executes exactly once per call.
+
     The check-then-write pair runs inside the adapter's per-path write
     lock: two racing appends otherwise both pass the duplicate check
     before either writes (and plain Parquet's commit staging is not even
@@ -105,7 +110,7 @@ def append(
 
     def cycle() -> int:
         with a.write_lock(path):
-            new = _with_day(df.dropDuplicates(SLICE_KEY))
+            new = _with_day(df.dropDuplicates(SLICE_KEY)).localCheckpoint(eager=True)
             if a.exists(spark, path):
                 existing = a.read(spark, path)
                 # restrict the anti-join to the touched days via a broadcast
@@ -136,12 +141,13 @@ def upsert(
     — a new granule for an already-processed day reprocesses that day).
     Dynamic partition overwrite = partition-scoped MERGE.
     Returns the number of rows written (so repair-only cycles report their
-    rewrite volume, not 0)."""
+    rewrite volume, not 0). The batch is materialized once, like
+    :func:`append`'s, so the count and the overwrite share one execution."""
     a = _adapter(adapter)
 
     def cycle() -> int:
         with a.write_lock(path):
-            new = _with_day(df.dropDuplicates(SLICE_KEY))
+            new = _with_day(df.dropDuplicates(SLICE_KEY)).localCheckpoint(eager=True)
             n = new.count()
             a.overwrite_partitions(new, path, PARTITION_COLS)
             return n

@@ -36,6 +36,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans import pipeline as pipe
 from ..sinks import store as store_ops
 
 
@@ -185,7 +186,7 @@ def make_batch_processor(
     (e.g. plans.pipeline.process_oco3_granules + export.melt_values).
     """
 
-    def process(batch: DataFrame, batch_id: int) -> None:
+    def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         good, poison = split_poison(batch)
         if poison.limit(1).count():
@@ -240,6 +241,11 @@ def make_batch_processor(
             slices.unpersist()
         finally:
             good.unpersist()
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        # the rows the transform's pipelines cache live as long as the batch
+        with pipe.cached_rows():
+            process_batch(batch, batch_id)
 
     return process
 

@@ -111,10 +111,14 @@ def test_batch_run_end_to_end(spark, batch_env):
     data["target_name"] = np.array(["Fossil One"] * n)
     np.savez(g, **data)
 
+    spark.catalog.clearCache()
     report = run_batch(spark, cfg)
     assert report["missions"]["oco3"]["rows_appended"] > 0
     assert report["verify"]["duplicate_keys"] == 0
     assert report["exported_slices"] > 0
+    # the pipeline's cached rows are released once the append is written:
+    # a long-lived session does not pin one more cached frame per run
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     stored = spark.read.parquet(f"{batch_env}/store")
     assert {r.qf for r in stored.select("qf").distinct().collect()} == {"pre", "post"}

@@ -248,3 +248,64 @@ def test_sif_segmentation_none_and_inclusive_margin(spark):
     sam = [x for x in regions if x.mode == 3]
     assert len(sam) == 1
     assert (sam[0].target_id, sam[0].start_idx, sam[0].stop_excl) == ("sif_atto", 0, 10)
+
+
+def _square(cx, cy, h=0.2):
+    return [cx - h, cx + h, cx + h, cx - h], [cy - h, cy - h, cy + h, cy + h]
+
+
+@pytest.mark.parametrize("case", ["midnight", "overlap"])
+def test_mask_matches_semi_join_form(spark, case):
+    """The mask keeps the refined grid rows directly; it must give exactly
+    the rows of its former form (refined cell keys, then the grid
+    semi-joined back against them), with no duplicates.
+
+    midnight: one region whose soundings straddle UTC midnight grids as two
+    groups with the same (qf, granule, mode, region_id); deduplicating on
+    the region key alone would merge them. overlap: cells hit by several
+    footprints, which yield one refined pair per footprint."""
+    from oco3_data_transformer_spark.operators import grid as G
+
+    region = ["qf", "granule", "mode", "region_id"]
+    group = [*region, "target_id", "time", "min_lon", "min_lat", "max_lon", "max_lat"]
+    cell_keys = [*group, "lat_idx", "lon_idx"]
+    days = [DAY, DAY + dt.timedelta(days=1)] if case == "midnight" else [DAY]
+    # a 4 x 4 mesh over bbox (0, 0, 3, 3): cell centres on integers, half 0.5
+    grid_rows = [
+        ("post", "g1", 4, rid, "fossil0001", day, 0.0, 0.0, 3.0, 3.0, i, j,
+         float(i), float(j), 400.0 + 100 * rid + 16 * k + 4 * i + j, 0.5, 0.5)
+        for rid in (0, 1) for k, day in enumerate(days) for i in range(4) for j in range(4)
+    ]
+    gridded = spark.createDataFrame(
+        grid_rows,
+        "qf string, granule string, mode int, region_id long, target_id string, "
+        "time timestamp, min_lon double, min_lat double, max_lon double, max_lat double, "
+        "lat_idx int, lon_idx int, lat float, lon float, xco2 double, "
+        "__half_lon double, __half_lat double",
+    )
+    # (region_id, footprint centre): region 0 hits cell (1, 1) and the four
+    # cells around (2.5, 2.5); region 1 hits cell (0, 3) only
+    centres = [(0, 1.0, 1.0), (0, 2.5, 2.5), (1, 3.0, 0.0)]
+    if case == "overlap":
+        centres += [(0, 1.1, 0.9), (0, 0.9, 1.1), (0, 2.45, 2.55)]
+    footprints = spark.createDataFrame(
+        [("post", "g1", 4, rid, *_square(x, y)) for rid, x, y in centres],
+        "qf string, granule string, mode int, region_id long, "
+        "v_lon array<float>, v_lat array<float>",
+    )
+
+    new = P._mask_with_row_halves(gridded, footprints, region, cell_keys, 1.0)
+    hits = G.footprint_cell_hits(gridded, footprints, region, 0.5, 0.5)
+    key = [*region, "lat_idx", "lon_idx"]
+    old = gridded.join(hits.select(*key).distinct(), key, "left_semi")
+
+    got = sorted(tuple(r) for r in new.select(*gridded.columns).collect())
+    want = sorted(tuple(r) for r in old.select(*gridded.columns).collect())
+    assert got == want
+    assert len(got) == len(set(got)) == new.dropDuplicates(cell_keys).count()
+    cells = {(r[3], r[5], r[10], r[11]) for r in got}
+    assert cells == {
+        (rid, day, i, j)
+        for day in days
+        for rid, i, j in [(0, 1, 1), (0, 2, 2), (0, 2, 3), (0, 3, 2), (0, 3, 3), (1, 0, 3)]
+    }

@@ -943,3 +943,99 @@ def test_q129_window_spans_plan_hash_only_and_partial_agg(spark):
         first_line = seg.splitlines()[0]
         assert "__w" not in first_line, f"window string crossed a shuffle: {first_line}"
     assert "CartesianProduct" not in plan
+
+
+# --- mission pipeline: each Python kernel runs once per write ---------------
+
+
+@pytest.fixture()
+def oco3_day(tmp_path):
+    """One OCO-3 npz granule (a SAM run over one target, every third
+    sounding bad) and the run config that grids it."""
+    import json
+
+    import numpy as np
+
+    from oco3_data_transformer_spark.config import RunConfig
+
+    n = 12
+    lat = np.linspace(10.0, 10.4, n)
+    lon = np.linspace(20.0, 20.4, n)
+    d = 0.03
+    granule = tmp_path / "oco3_LtCO2_240301_B11000_1.npz"
+    np.savez(
+        granule,
+        sounding_idx=np.arange(n, dtype=np.int64),
+        sounding_id=np.arange(n, dtype=np.int64) + 1000,
+        time=np.full(n, np.datetime64("2024-03-01T00:00:00", "us")),
+        latitude=lat.astype(np.float32),
+        longitude=lon.astype(np.float32),
+        vertex_latitude=np.stack([lat - d, lat - d, lat + d, lat + d], 1).astype(np.float32),
+        vertex_longitude=np.stack([lon - d, lon + d, lon + d, lon - d], 1).astype(np.float32),
+        operation_mode=np.full(n, 4, dtype=np.int8),
+        target_id=np.array(["fossil0001"] * n),
+        target_name=np.array(["Fossil One"] * n),
+        xco2_quality_flag=(np.arange(n) % 3 == 0).astype(np.int8),
+        xco2=np.linspace(400, 401, n),
+        xco2_uncertainty=np.full(n, 0.5),
+    )
+    targets = tmp_path / "targets.json"
+    targets.write_text(json.dumps({"fossil0001": {
+        "name": "Fossil One",
+        "bbox": {"min_lon": 19.9, "min_lat": 9.9, "max_lon": 20.6, "max_lat": 10.6},
+    }}))
+    return RunConfig(
+        store_path=str(tmp_path / "store"),
+        input_files=[{"path": str(granule), "mission": "oco3"}],
+        grid_lat_res=6, grid_lon_res=6, grid_method="nearest",
+        targets={"oco3": str(targets)},
+    )
+
+
+def _day_slices(spark, cfg):
+    from oco3_data_transformer_spark.main import mission_slices
+
+    return mission_slices(spark, cfg, "oco3", [e["path"] for e in cfg.input_files])
+
+
+@pytest.mark.parametrize("global_mode", [False, True])
+def test_mission_slices_run_each_python_kernel_once(spark, oco3_day, global_mode):
+    """The executed plan of one mission's slices holds ONE grid kernel
+    (MapInPandas) and ONE mask refine (ArrowEvalPython): the mask keeps the
+    refined grid rows instead of joining the grid back, and drop-empty is
+    a window, not a join of the slices against an aggregate of themselves."""
+    oco3_day.global_mode = global_mode
+    slices = _day_slices(spark, oco3_day)
+    assert slices.count() > 0
+    slices.collect()  # finalize THIS QueryExecution's adaptive plan
+    # the final plan only: the cached rows' plan prints its own Initial Plan
+    plan = str(slices._jdf.queryExecution().executedPlan().finalPhysicalPlan())
+    # the granule decoder is a MapInPandas too: count the kernels by name
+    assert plan.count("MapInPandas fit_partition(") == 1, plan
+    assert plan.count("ArrowEvalPython [refine(") == 1, plan
+
+
+def test_store_append_executes_slices_once(spark, oco3_day):
+    """store.append materializes its input once: of the SQL executions it
+    runs, exactly one contains the grid kernel (read from the SQL status
+    store, as the benchmark's store.input_execs_per_write is)."""
+    from oco3_data_transformer_spark.sinks import store as store_ops
+
+    status = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions() -> dict[int, str]:
+        bus.waitUntilEmpty()
+        it = status.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[int(e.executionId())] = str(e.physicalPlanDescription())
+        return out
+
+    slices = _day_slices(spark, oco3_day)
+    seen = executions()
+    assert store_ops.append(spark, slices, oco3_day.store_path) > 0
+    plans = [p for i, p in executions().items() if i not in seen]
+    assert len(plans) >= 2  # the materialization, then the count and the write
+    assert sum("fit_partition(" in p for p in plans) == 1
