@@ -170,7 +170,8 @@ def run_batch(spark: SparkSession, cfg: RunConfig, fmt: str = "npz") -> dict:
 
     report["verify"] = store_ops.verify(spark, cfg.store_path)
     # A7: persist store-level attrs (coverage + run metadata) on every write,
-    # the reference's Zarr-attr maintenance (ref writers/ZarrWriter.py:140-167)
+    # the reference's Zarr-attr maintenance (ref writers/ZarrWriter.py:140-167);
+    # the coverage is verify's, so the store is scanned once
     report["attrs"] = store_ops.write_attrs(
         spark, cfg.store_path,
         {
@@ -179,6 +180,7 @@ def run_batch(spark: SparkSession, cfg: RunConfig, fmt: str = "npz") -> dict:
             **{f"naming_{k}": v for k, v in cfg.naming.items()},
             **{f"title_{k}": v for k, v in cfg.title.items()},
         },
+        cov=report["verify"],
     )
     if cfg.export_path:
         # georeference each raster with ITS target's grid bbox (global

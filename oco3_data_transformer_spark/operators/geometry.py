@@ -13,9 +13,12 @@ vectorized in numpy:
     ∨ edge-pair crossing) — exact for simple polygons, which sounding
     footprints (quadrilaterals) are.
 
-These run inside Arrow-batched pandas UDFs: the *coarse* phase of the mask
-join stays a DataFrame bbox range join (operators/joins.bbox_prefilter_join);
-only surviving (cell, footprint) pairs reach this exact refine.
+These run inside the Python kernels, after a bbox prefilter: only the
+(cell, footprint) pairs whose bounding boxes overlap reach the exact test.
+The target-focused mask prefilters in numpy inside the grid kernel
+(operators/grid.grid_regions); global mode prefilters with a DataFrame band
+join and refines the pairs in an Arrow-batched pandas UDF
+(operators/grid.footprint_cell_hits).
 """
 
 from __future__ import annotations

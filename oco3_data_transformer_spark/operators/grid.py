@@ -19,9 +19,15 @@ Spark-first design:
     importable, else the pure-numpy implementation of the same element
     (Powell's affine-invariant reduction, interp.cubic_griddata) when
     ``allow_fallback`` else raises NotImplementedError.
-  - the footprint mask (G6/J4) is a bbox range-join prefilter in pure
-    DataFrame ops + an exact numpy refine (operators/geometry.py) in an
-    Arrow-batched pandas UDF.
+  - the target-focused footprint mask (G6/J4) runs inside the same kernel:
+    the rows are partitioned on the mask key (qf, region), each mask
+    group's footprint rings are stacked once, and every grid sub-group's
+    cells are tested against them (bbox prefilter + the exact numpy
+    box×polygon predicate, operators/geometry.py) — the reference's
+    per-target interpolate-then-mask loop (ref :66-307), with no spatial
+    join. Global mode needs the (cell, footprint) hit pairs for its
+    first-wins metadata, so it keeps the pair-returning band join
+    (:func:`footprint_cell_hits`).
   - first-writer-wins rasterization (G7) is a row_number window, with the
     explicit deterministic region order the reference gets implicitly from
     its Python loop (ref processors/OCO3SamGlobalProcessor.py:330-339).
@@ -136,6 +142,8 @@ def grid_regions(
     lat_res: int = 40,
     method: str = "nearest",
     bbox_cols: tuple[str, str, str, str] | None = None,
+    mask_keys: list[str] | None = None,
+    mask_scale: float = 1.0,
 ) -> DataFrame:
     """G1/G2 as a grouped-map operator: one kernel invocation per region,
     emitting long-format grid rows (region keys..., lat_idx, lon_idx,
@@ -145,9 +153,22 @@ def grid_regions(
     max_lat) from the J1 broadcast join; when None the global mesh bbox is
     used (G2, ref processors/OCO3SamGlobalProcessor.py:67-205).
 
-    Scale: groups are independent; Spark hashes region keys across
-    executors. Mesh size × variables bounds each group's output
-    (lat_res·lon_res rows), so task memory is deterministic.
+    ``mask_keys`` (a subset of ``region_keys``; needs ``bbox_cols``): G6/J4
+    footprint mask. Only the cells whose box intersects at least one
+    footprint of the rows sharing their mask key are kept — footprints are
+    the rows' ``vertex_longitude``/``vertex_latitude`` rings scaled about
+    their centroids by ``mask_scale`` (ref processors/OCO3SamProcessor.py:234-307). A cell's
+    box is its mesh step: half-sizes (max − min) / (2·max(res − 1, 1)). The
+    bbox prefilter uses the unscaled footprint extents, the exact test the
+    scaled rings. A region straddling UTC midnight grids as one group per
+    day, each masked by the footprints of both days.
+
+    Scale: groups are independent; Spark hashes the partition keys (the
+    mask key when masking, else the region keys) into
+    ``spark.sql.shuffle.partitions`` partitions — an explicit count, which
+    AQE does not coalesce, so the kernel stage runs on every core. Mesh
+    size × variables bounds each group's output (lat_res·lon_res rows), so
+    task memory is deterministic.
 
     r10: the fan-out is ``repartition(keys) + mapInPandas`` with an
     in-partition pandas groupby, NOT ``applyInPandas`` — identical group
@@ -238,17 +259,88 @@ def grid_regions(
                 ).ravel()
         return pd.DataFrame(out)[[f.name for f in out_schema.fields]]
 
+    # looked up when the plan is built, so a wrapped predicate (the
+    # benchmark's counters) is the one the tasks run
+    from .geometry import boxes_intersect_polygons, scale_footprint
+
+    div_lon = 2 * max(lon_res - 1, 1)
+    div_lat = 2 * max(lat_res - 1, 1)
+
+    def masked(pdf_all):
+        for _, m in pdf_all.groupby(list(mask_keys), sort=False):
+            rings = _footprint_rings(
+                m["vertex_longitude"], m["vertex_latitude"], mask_scale, scale_footprint
+            )
+            for _, g in m.groupby(list(region_keys), sort=False):
+                cells = fit(g)
+                b = g.iloc[0]
+                keep = _cells_hit(
+                    cells["lon"].to_numpy(), cells["lat"].to_numpy(),
+                    (b[bbox_cols[2]] - b[bbox_cols[0]]) / div_lon,
+                    (b[bbox_cols[3]] - b[bbox_cols[1]]) / div_lat,
+                    rings, boxes_intersect_polygons,
+                )
+                yield cells[keep]
+
     def fit_partition(batches):
         frames = [b for b in batches if len(b)]
         if not frames:
             return
         pdf_all = pd.concat(frames, ignore_index=True)
+        if mask_keys is not None:
+            yield from masked(pdf_all)
+            return
         for _, g in pdf_all.groupby(list(region_keys), sort=False):
             yield fit(g)
 
-    return soundings.repartition(*region_keys).mapInPandas(
+    n_parts = int(soundings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return soundings.repartition(n_parts, *(mask_keys or region_keys)).mapInPandas(
         fit_partition, out_schema
     )
+
+
+def _footprint_rings(v_lon: pd.Series, v_lat: pd.Series, scale: float, scale_footprint):
+    """One mask group's footprints: the unscaled ring extents (the bbox
+    prefilter's bounds; NaN vertices ignored, as Spark's array_min/max
+    ignore nulls) and the float64 rings scaled by ``scale``. Rows without a
+    ring have no footprint."""
+    ok = (v_lon.notna() & v_lat.notna()).to_numpy()
+    if not ok.any():
+        return None
+    px = np.stack(v_lon.to_numpy()[ok]).astype(np.float64)
+    py = np.stack(v_lat.to_numpy()[ok]).astype(np.float64)
+    extents = (np.fmin.reduce(px, axis=1), np.fmax.reduce(px, axis=1),
+               np.fmin.reduce(py, axis=1), np.fmax.reduce(py, axis=1))
+    if scale != 1.0:
+        px, py = scale_footprint(px, py, scale)
+    return extents, px, py
+
+
+def _cells_hit(lon, lat, half_lon, half_lat, rings, intersects) -> np.ndarray:
+    """Per cell: does its box intersect at least one footprint? A bbox
+    prefilter selects the (cell, footprint) pairs, then ``intersects``
+    (geometry.boxes_intersect_polygons) tests each pair exactly. The
+    candidate matrix is chunked over cells to bound memory."""
+    keep = np.zeros(len(lon), dtype=bool)
+    if rings is None:
+        return keep
+    (f_x0, f_x1, f_y0, f_y1), px, py = rings
+    lo = lon.astype(np.float64)
+    la = lat.astype(np.float64)
+    x0, x1, y0, y1 = lo - half_lon, lo + half_lon, la - half_lat, la + half_lat
+    step = max(1, 2_000_000 // len(f_x0))
+    for s in range(0, len(lo), step):
+        e = s + step
+        ci, fi = np.nonzero(
+            (x0[s:e, None] <= f_x1) & (x1[s:e, None] >= f_x0)
+            & (y0[s:e, None] <= f_y1) & (y1[s:e, None] >= f_y0)
+        )
+        if len(ci) == 0:
+            continue
+        ci += s
+        hit = intersects(x0[ci], y0[ci], x1[ci], y1[ci], px[fi], py[fi])
+        keep[ci[hit]] = True
+    return keep
 
 
 _REFINE_SCHEMA = T.BooleanType()

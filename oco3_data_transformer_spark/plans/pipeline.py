@@ -9,15 +9,18 @@ Differences from the reference that are architecture, not semantics:
     MERGE-style append (sinks/store.py);
   - pre/post-QF dual output is two branches of one cached frame, not two
     passes over the files;
-  - a plan runs each Python kernel (the grid ``MapInPandas``, the
-    mask-refine ``ArrowEvalPython``) once per execution: the mask keeps the
-    refined grid rows themselves instead of joining the grid back.
-    ``store.append`` materializes its input once, so a day's kernels run
-    once per append.
+  - the target-focused footprint mask runs inside the grid kernel: one
+    ``MapInPandas`` grids each region and masks its cells to the region's
+    footprints (operators/grid.grid_regions), where the reference loops
+    over targets doing the same. Global mode still pairs cells with
+    footprints (one mask-refine ``ArrowEvalPython``), because its
+    first-wins metadata needs the pairs. ``store.append`` materializes its
+    input once, so a day's kernels run once per append.
 
-The cached row frame lives until the enclosing :func:`cached_rows` scope
-exits; main.run_batch, the orchestrator and the streaming ingest close one
-per write.
+The decoded soundings and the region rows are cached, so the granules are
+decoded once however many passes read them. The cache lives until the
+enclosing :func:`cached_rows` scope exits; main.run_batch, the orchestrator
+and the streaming ingest close one per write.
 """
 
 from __future__ import annotations
@@ -25,13 +28,9 @@ from __future__ import annotations
 import contextlib
 import contextvars
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..operators import filters as filter_ops
 from ..operators import grid as grid_ops
 from ..operators import joins as join_ops
 from ..operators import sessionize as sess_ops
@@ -124,6 +123,9 @@ def process_oco3_granules(
     # §2.4 segmentation + row membership (swallowed gap rows included).
     # The region's resolved target id and mode pass ride along on the rows;
     # a row's own (possibly off-mode, swallowed) values are superseded.
+    # Both segmentation passes and the row assignment read the soundings:
+    # decode them once.
+    soundings = _persist(soundings)
     regions = segment_oco3(soundings)
     regions = regions.filter(~F.col("target_id").isin(*MISSING_TARGET_IDS))  # F5
     rows = sess_ops.assign_rows_to_regions(
@@ -155,55 +157,27 @@ def _target_focused_tail(
     # J1: broadcast target-dimension join; unknown targets drop the region
     rows = join_ops.target_lookup(rows, targets, "target_id")
 
-    # F3/F4: pre/post QF split from one cached frame
+    # F3/F4: pre/post QF split from one cached frame. A post-QF region is
+    # one with >= 1 good row, which every region of the filtered rows has.
     rows = _persist(rows)
     region_cols = ["granule", "mode", "region_id"]
     pre = rows.withColumn("qf", F.lit("pre"))
-    post = (
-        filter_ops.drop_regions_without_good(rows.filter(good), region_cols, F.lit(True))
-        .withColumn("qf", F.lit("post"))
-    )
+    post = rows.filter(good).withColumn("qf", F.lit("post"))
     both = pre.unionByName(post)
 
     # day of granule = event time (C1 analog; fixtures carry `time` directly)
     both = both.withColumn("time", F.date_trunc("DAY", F.col("time")))
 
-    # G1: per (qf, region) gridding onto the target bbox mesh
-    grid_keys = ["qf", *region_cols, "target_id", "time", "min_lon", "min_lat", "max_lon", "max_lat"]
+    # G1 + G6/J4: per (qf, region, day) gridding onto the target bbox mesh,
+    # masked in the same kernel to the footprints of the (qf, region)
+    bbox = ["min_lon", "min_lat", "max_lon", "max_lat"]
     gridded = grid_ops.grid_regions(
-        both, grid_keys, value_cols,
+        both, ["qf", *region_cols, "target_id", "time", *bbox], value_cols,
         lon_col="longitude", lat_col="latitude",
         lon_res=lon_res, lat_res=lat_res, method=method,
-        bbox_cols=("min_lon", "min_lat", "max_lon", "max_lat"),
+        bbox_cols=tuple(bbox), mask_keys=["qf", *region_cols], mask_scale=mask_scale,
     )
-
-    # G6/J4: footprint mask (bbox prefilter + exact numpy refine)
-    footprints = both.select(
-        *region_cols,
-        F.col("qf"),
-        F.col("vertex_longitude").alias("v_lon"),
-        F.col("vertex_latitude").alias("v_lat"),
-    )
-    # cell half-sizes from the mesh step of each region's bbox
-    gridded = gridded.withColumn(
-        "__half_lon",
-        (F.col("max_lon") - F.col("min_lon")) / F.lit(2 * max(lon_res - 1, 1)),
-    ).withColumn(
-        "__half_lat",
-        (F.col("max_lat") - F.col("min_lat")) / F.lit(2 * max(lat_res - 1, 1)),
-    )
-    # mask join is per-region; half-sizes are uniform per region, pass the
-    # max as the conservative coarse bound and refine exactly per row
-    masked = _mask_with_row_halves(
-        gridded, footprints, ["qf", *region_cols], [*grid_keys, "lat_idx", "lon_idx"],
-        mask_scale,
-    )
-
-    drop_cols = ["min_lon", "min_lat", "max_lon", "max_lat", "__half_lon", "__half_lat"]
-    return (
-        masked.withColumn("mission", F.lit(mission))
-        .drop(*drop_cols)
-    )
+    return gridded.withColumn("mission", F.lit(mission)).drop(*bbox)
 
 
 def process_sif_granules(
@@ -219,7 +193,7 @@ def process_sif_granules(
     epoch (C3) → SIF segmentation (SAM=3, inclusive margin, 'none'
     tolerance) → QF good = flag ∈ {0,1} → grid Daily_SIF_757nm → mask
     (ref processors/OCO3SifProcessor.py end-to-end)."""
-    resolved = resolve_sif_targets(soundings, sequences)
+    resolved = _persist(resolve_sif_targets(soundings, sequences))
     regions = segment_sif(resolved)
     regions = regions.filter(F.col("target_id") != "none")  # target-focused
     rows = sess_ops.assign_rows_to_regions(
@@ -256,6 +230,7 @@ def process_oco2_granules(
     shared QF/grid/mask tail (ref processors/OCO2Processor.py end-to-end).
     OCO-2 carries xco2_x2019 as an extra science variable."""
     value_cols = value_cols or ["xco2", "xco2_uncertainty", "xco2_x2019"]
+    soundings = _persist(soundings)
     assoc = associate_oco2_regions(soundings, targets).select(
         "granule", "region_id", F.col("target_id").alias("__assoc_target")
     )
@@ -277,73 +252,6 @@ def process_oco2_granules(
         value_cols=value_cols, lon_res=lon_res, lat_res=lat_res,
         method=method, mask_scale=mask_scale, mission="oco2",
     )
-
-
-def _mask_with_row_halves(
-    gridded: DataFrame,
-    footprints: DataFrame,
-    region_keys: list[str],
-    cell_keys: list[str],
-    scale: float,
-) -> DataFrame:
-    """G6/J4: keep the grid cells whose box intersects >= 1 footprint of
-    the same region. Cell half-sizes ride on the rows (per-region meshes
-    differ); a bbox band join prefilters the (cell, footprint) pairs and a
-    numpy kernel refines them exactly (as grid_ops.footprint_cell_hits).
-
-    The surviving pairs ARE the kept grid rows: they are projected back
-    onto ``gridded``'s columns and deduplicated on ``cell_keys`` (the grid
-    kernel's full group key plus lat_idx, lon_idx), so ``gridded`` executes
-    once. The region key alone would not do: one region straddling UTC
-    midnight is two grid groups, one per day."""
-    from ..operators.geometry import boxes_intersect_polygons, scale_footprint
-
-    fp = footprints.select(
-        *[F.col(k).alias(f"__f_{k}") for k in region_keys],
-        F.col("v_lon"), F.col("v_lat"),
-        F.array_min("v_lon").alias("fp_min_lon"),
-        F.array_max("v_lon").alias("fp_max_lon"),
-        F.array_min("v_lat").alias("fp_min_lat"),
-        F.array_max("v_lat").alias("fp_max_lat"),
-    )
-    cond = F.lit(True)
-    for k in region_keys:
-        cond = cond & (F.col(k) == F.col(f"__f_{k}"))
-    cond = (
-        cond
-        & (F.col("lon") - F.col("__half_lon") <= F.col("fp_max_lon"))
-        & (F.col("lon") + F.col("__half_lon") >= F.col("fp_min_lon"))
-        & (F.col("lat") - F.col("__half_lat") <= F.col("fp_max_lat"))
-        & (F.col("lat") + F.col("__half_lat") >= F.col("fp_min_lat"))
-    )
-    paired = gridded.join(fp, cond, "inner")
-
-    @F.pandas_udf(T.BooleanType())
-    def refine(
-        lon: pd.Series, lat: pd.Series, hlon: pd.Series, hlat: pd.Series,
-        v_lon: pd.Series, v_lat: pd.Series,
-    ) -> pd.Series:
-        if len(lon) == 0:
-            return pd.Series([], dtype=bool)
-        px = np.stack(v_lon.to_numpy()).astype(np.float64)
-        py = np.stack(v_lat.to_numpy()).astype(np.float64)
-        if scale != 1.0:
-            px, py = scale_footprint(px, py, scale)
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
-        hl = hlon.to_numpy(dtype=np.float64)
-        hb = hlat.to_numpy(dtype=np.float64)
-        return pd.Series(
-            boxes_intersect_polygons(lo - hl, la - hb, lo + hl, la + hb, px, py)
-        )
-
-    hits = paired.filter(
-        refine(
-            F.col("lon"), F.col("lat"), F.col("__half_lon"), F.col("__half_lat"),
-            F.col("v_lon"), F.col("v_lat"),
-        )
-    )
-    return hits.select(*gridded.columns).dropDuplicates(cell_keys)
 
 
 def process_oco3_global(
@@ -372,6 +280,7 @@ def process_oco3_global(
 
     value_cols = value_cols or ["xco2", "xco2_uncertainty"]
 
+    soundings = _persist(soundings)
     regions = segment_oco3(soundings)  # keeps 'Missing' targets: global mode
     rows = sess_ops.assign_rows_to_regions(
         soundings.drop("target_id", "target_name"), regions,
@@ -379,12 +288,8 @@ def process_oco3_global(
     )
     rows = _persist(rows)
     good = F.col("xco2_quality_flag") == 0
-    region_cols = ["granule", "mode", "region_id"]
     pre = rows.withColumn("qf", F.lit("pre"))
-    post = (
-        filter_ops.drop_regions_without_good(rows.filter(good), region_cols, F.lit(True))
-        .withColumn("qf", F.lit("post"))
-    )
+    post = rows.filter(good).withColumn("qf", F.lit("post"))
     both = pre.unionByName(post).withColumn("time", F.date_trunc("DAY", F.col("time")))
 
     # G2: one grid fit per (qf, day) over the shared global mesh

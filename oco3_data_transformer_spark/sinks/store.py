@@ -97,8 +97,10 @@ def append(
 
     The incoming rows are materialized once (``localCheckpoint``) before
     their three consumers — the touched-day frame, the anti-join and the
-    count-then-write — so ``df``'s plan (for a mission pipeline: the grid
-    kernel and the footprint mask) executes exactly once per call.
+    count-then-write — so ``df``'s plan (for a mission pipeline: the
+    masked grid kernel) executes exactly once per call. The anti-joined
+    rows are materialized as well, so the count and the write share one
+    store scan.
 
     The check-then-write pair runs inside the adapter's per-path write
     lock: two racing appends otherwise both pass the duplicate check
@@ -119,7 +121,11 @@ def append(
                 # thousands of days never materializes a thousands-literal IN list
                 days = F.broadcast(new.select("day").distinct())
                 existing = existing.join(days, on="day", how="left_semi").select(*SLICE_KEY)
-                deduped = new.join(existing, on=SLICE_KEY, how="left_anti")
+                # materialized too: the count and the write then share one
+                # scan of the store and one anti-join
+                deduped = new.join(existing, on=SLICE_KEY, how="left_anti").localCheckpoint(
+                    eager=True
+                )
             else:
                 deduped = new
             n = deduped.count()
@@ -387,15 +393,23 @@ def coverage(spark: SparkSession, path: str) -> dict:
 _ATTRS_FILE = "_store_attrs.json"
 
 
-def write_attrs(spark: SparkSession, path: str, extra: dict | None = None) -> dict:
+def write_attrs(
+    spark: SparkSession, path: str, extra: dict | None = None,
+    cov: dict | None = None,
+) -> dict:
     """A7: persist store-level attributes — time coverage plus caller
     metadata (title, grid resolution, QF naming) — the reference maintains
     these as Zarr attrs on every write (ref writers/ZarrWriter.py:140-167);
     here they live in a ``_store_attrs.json`` sidecar next to the
-    partitions (underscore prefix → ignored by parquet readers)."""
+    partitions (underscore prefix → ignored by parquet readers).
+
+    ``cov``: the store's coverage when the caller already has it (a
+    :func:`verify` report carries it); otherwise the store is scanned."""
     import json
 
-    attrs = {k: str(v) for k, v in coverage(spark, path).items()}
+    if cov is None:
+        cov = coverage(spark, path)
+    attrs = {k: str(cov[k]) for k in ("coverage_start", "coverage_end")}
     attrs["updated_at"] = dt.datetime.now(dt.timezone.utc).isoformat()
     attrs.update({k: v for k, v in (extra or {}).items()})
     sc = spark.sparkContext

@@ -254,58 +254,67 @@ def _square(cx, cy, h=0.2):
     return [cx - h, cx + h, cx + h, cx - h], [cy - h, cy - h, cy + h, cy + h]
 
 
+def _diamond(cx, cy, r=0.3):
+    return [cx - r, cx, cx + r, cx], [cy, cy - r, cy, cy + r]
+
+
+@pytest.mark.parametrize("scale", [1.0, 1.3])
 @pytest.mark.parametrize("case", ["midnight", "overlap"])
-def test_mask_matches_semi_join_form(spark, case):
-    """The mask keeps the refined grid rows directly; it must give exactly
-    the rows of its former form (refined cell keys, then the grid
-    semi-joined back against them), with no duplicates.
+def test_mask_matches_semi_join_form(spark, case, scale):
+    """grid_regions with ``mask_keys`` masks each grid group inside the
+    kernel; it must give exactly the rows of the semi-join form (the
+    unmasked grid, footprint_cell_hits' refined pairs, then the grid
+    semi-joined against their cell keys), with no duplicates.
 
     midnight: one region whose soundings straddle UTC midnight grids as two
-    groups with the same (qf, granule, mode, region_id); deduplicating on
-    the region key alone would merge them. overlap: cells hit by several
-    footprints, which yield one refined pair per footprint."""
+    groups with the same (qf, granule, mode, region_id), each masked by the
+    footprints of both days. overlap: cells hit by several footprints. The
+    diamond's box overlaps cell (0, 0), but only its 1.3x scaled ring
+    reaches it: the prefilter takes the unscaled extents, the exact test
+    the scaled ring."""
     from oco3_data_transformer_spark.operators import grid as G
 
     region = ["qf", "granule", "mode", "region_id"]
     group = [*region, "target_id", "time", "min_lon", "min_lat", "max_lon", "max_lat"]
-    cell_keys = [*group, "lat_idx", "lon_idx"]
     days = [DAY, DAY + dt.timedelta(days=1)] if case == "midnight" else [DAY]
-    # a 4 x 4 mesh over bbox (0, 0, 3, 3): cell centres on integers, half 0.5
-    grid_rows = [
-        ("post", "g1", 4, rid, "fossil0001", day, 0.0, 0.0, 3.0, 3.0, i, j,
-         float(i), float(j), 400.0 + 100 * rid + 16 * k + 4 * i + j, 0.5, 0.5)
-        for rid in (0, 1) for k, day in enumerate(days) for i in range(4) for j in range(4)
-    ]
-    gridded = spark.createDataFrame(
-        grid_rows,
+    # (region_id, day, footprint ring); the sounding sits at its centre
+    fps = [(0, 0, _square(1.0, 1.0)), (0, -1, _square(2.5, 2.5)),
+           (0, 0, _diamond(0.68, 0.68)), (1, 0, _square(3.0, 0.0)),
+           (1, -1, _square(3.0, 0.0))]
+    if case == "overlap":
+        fps += [(0, 0, _square(1.1, 0.9)), (0, 0, _square(0.9, 1.1)),
+                (0, 0, _square(2.45, 2.55))]
+    soundings = spark.createDataFrame(
+        [("post", "g1", 4, rid, "fossil0001", days[d], 0.0, 0.0, 3.0, 3.0,
+          sum(v_lon) / 4, sum(v_lat) / 4, 400.0 + 10 * k, v_lon, v_lat)
+         for k, (rid, d, (v_lon, v_lat)) in enumerate(fps)],
         "qf string, granule string, mode int, region_id long, target_id string, "
         "time timestamp, min_lon double, min_lat double, max_lon double, max_lat double, "
-        "lat_idx int, lon_idx int, lat float, lon float, xco2 double, "
-        "__half_lon double, __half_lat double",
+        "longitude double, latitude double, xco2 double, "
+        "vertex_longitude array<float>, vertex_latitude array<float>",
     )
-    # (region_id, footprint centre): region 0 hits cell (1, 1) and the four
-    # cells around (2.5, 2.5); region 1 hits cell (0, 3) only
-    centres = [(0, 1.0, 1.0), (0, 2.5, 2.5), (1, 3.0, 0.0)]
-    if case == "overlap":
-        centres += [(0, 1.1, 0.9), (0, 0.9, 1.1), (0, 2.45, 2.55)]
-    footprints = spark.createDataFrame(
-        [("post", "g1", 4, rid, *_square(x, y)) for rid, x, y in centres],
-        "qf string, granule string, mode int, region_id long, "
-        "v_lon array<float>, v_lat array<float>",
+    # a 4 x 4 mesh over bbox (0, 0, 3, 3): cell centres on integers, half 0.5
+    kw = dict(lon_res=4, lat_res=4, bbox_cols=("min_lon", "min_lat", "max_lon", "max_lat"))
+    new = G.grid_regions(soundings, group, ["xco2"], mask_keys=region, mask_scale=scale, **kw)
+    gridded = G.grid_regions(soundings, group, ["xco2"], **kw)
+    footprints = soundings.select(
+        *region, F.col("vertex_longitude").alias("v_lon"), F.col("vertex_latitude").alias("v_lat")
     )
-
-    new = P._mask_with_row_halves(gridded, footprints, region, cell_keys, 1.0)
-    hits = G.footprint_cell_hits(gridded, footprints, region, 0.5, 0.5)
+    hits = G.footprint_cell_hits(gridded, footprints, region, 0.5, 0.5, scale)
     key = [*region, "lat_idx", "lon_idx"]
     old = gridded.join(hits.select(*key).distinct(), key, "left_semi")
 
-    got = sorted(tuple(r) for r in new.select(*gridded.columns).collect())
+    got = sorted(tuple(r) for r in new.collect())
     want = sorted(tuple(r) for r in old.select(*gridded.columns).collect())
     assert got == want
-    assert len(got) == len(set(got)) == new.dropDuplicates(cell_keys).count()
+    assert len(got) == len(set(got)) == new.dropDuplicates([*group, "lat_idx", "lon_idx"]).count()
     cells = {(r[3], r[5], r[10], r[11]) for r in got}
+    rid0 = [(1, 1), (2, 2), (2, 3), (3, 2), (3, 3), (0, 1), (1, 0)]
+    if scale > 1.0:
+        rid0.append((0, 0))
     assert cells == {
         (rid, day, i, j)
         for day in days
-        for rid, i, j in [(0, 1, 1), (0, 2, 2), (0, 2, 3), (0, 3, 2), (0, 3, 3), (1, 0, 3)]
+        for rid, ij in [(0, rid0), (1, [(0, 3)])]
+        for i, j in ij
     }

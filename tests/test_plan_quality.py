@@ -999,20 +999,73 @@ def _day_slices(spark, cfg):
 
 
 @pytest.mark.parametrize("global_mode", [False, True])
-def test_mission_slices_run_each_python_kernel_once(spark, oco3_day, global_mode):
-    """The executed plan of one mission's slices holds ONE grid kernel
-    (MapInPandas) and ONE mask refine (ArrowEvalPython): the mask keeps the
-    refined grid rows instead of joining the grid back, and drop-empty is
-    a window, not a join of the slices against an aggregate of themselves."""
+def test_mission_slices_run_each_python_kernel_once(spark, oco3_day, global_mode, monkeypatch):
+    """One execution of a mission's slices decodes each granule once (the
+    segmentation passes and the row assignment read the cached soundings;
+    counted where the decoder runs, since every cache scan re-prints the
+    cached plan's decode node), and its executed plan holds ONE grid
+    kernel (``MapInPandas fit_partition(``). Target mode masks inside that
+    kernel, so it has no ArrowEvalPython at all; global mode keeps ONE
+    mask refine, whose hit pairs carry the first-wins metadata. Drop-empty
+    is a window, not a join of the slices against an aggregate of
+    themselves."""
+    from oco3_data_transformer_spark.sources import granules
+
+    decodes = spark.sparkContext.accumulator(0)
+    npz = granules.DECODERS["npz"]
+
+    def counted(*a, **k):
+        decodes.add(1)
+        return npz(*a, **k)
+
+    monkeypatch.setitem(granules.DECODERS, "npz", counted)
     oco3_day.global_mode = global_mode
+    spark.catalog.clearCache()
     slices = _day_slices(spark, oco3_day)
     assert slices.count() > 0
+    assert decodes.value == 1
     slices.collect()  # finalize THIS QueryExecution's adaptive plan
     # the final plan only: the cached rows' plan prints its own Initial Plan
     plan = str(slices._jdf.queryExecution().executedPlan().finalPhysicalPlan())
-    # the granule decoder is a MapInPandas too: count the kernels by name
     assert plan.count("MapInPandas fit_partition(") == 1, plan
-    assert plan.count("ArrowEvalPython [refine(") == 1, plan
+    assert plan.count("ArrowEvalPython") == int(global_mode), plan
+    if global_mode:
+        assert plan.count("ArrowEvalPython [refine(") == 1, plan
+    spark.catalog.clearCache()
+
+
+def test_grid_kernel_exchange_is_not_coalesced(spark):
+    """The grid kernel's exchange has an explicit partition count
+    (``spark.sql.shuffle.partitions``): AQE leaves a REPARTITION_BY_NUM
+    shuffle alone, so a small input still fans its groups out over every
+    partition instead of one coalesced task."""
+    from pyspark.sql import functions as F
+
+    from oco3_data_transformer_spark.operators import grid as G
+
+    conf = {"spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.coalescePartitions.enabled": "true",
+            "spark.sql.shuffle.partitions": "8"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        pts = spark.range(64).select(
+            F.col("id").alias("region"),
+            (F.col("id") % 7).cast("double").alias("longitude"),
+            (F.col("id") % 5).cast("double").alias("latitude"),
+            F.col("id").cast("double").alias("xco2"),
+        )
+        out = G.grid_regions(pts, ["region"], ["xco2"], lon_res=2, lat_res=2)
+        tagged = out.withColumn("pid", F.spark_partition_id())
+        pids = {r.pid for r in tagged.select("pid").distinct().collect()}
+        plan = str(tagged._jdf.queryExecution().executedPlan().finalPhysicalPlan())
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert "REPARTITION_BY_NUM" in plan, plan
+    assert "coalesced" not in plan, plan
+    assert len(pids) == 8, (pids, plan)
 
 
 def test_store_append_executes_slices_once(spark, oco3_day):
