@@ -258,8 +258,11 @@ def _diamond(cx, cy, r=0.3):
     return [cx - r, cx, cx + r, cx], [cy, cy - r, cy, cy + r]
 
 
-@pytest.mark.parametrize("scale", [1.0, 1.3])
-@pytest.mark.parametrize("case", ["midnight", "overlap"])
+@pytest.mark.parametrize(
+    "case, scale",
+    [pytest.param(case, scale, id=case + ("-scaled" if scale > 1.0 else ""))
+     for scale in (1.0, 1.3) for case in ("midnight", "overlap")],
+)
 def test_mask_matches_semi_join_form(spark, case, scale):
     """grid_regions with ``mask_keys`` masks each grid group inside the
     kernel; it must give exactly the rows of the semi-join form (the
