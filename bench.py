@@ -173,7 +173,12 @@ def spark_leg(
 ) -> dict[str, dict]:
     # min of N runs per query: later runs reuse compiled codegen and
     # warmed JVM paths, which is the steady-state a long-running cluster
-    # job sees; min-of-N is the standard variance-control for microbench
+    # job sees. With Spark's default 100-class codegen cache that reuse
+    # held only within one query (the next queries evicted its classes);
+    # get_spark's larger cache keeps every class of the leg. "compiles"
+    # (build + first rep) and "recompiles" (later reps) in BENCH_DETAIL
+    # count the generated classes compiled, read outside the timed
+    # regions. min-of-N is the standard variance-control for microbench
     # and absorbs ambient-load spikes on a shared machine. The median is
     # reported alongside so a lucky min can't hide run-to-run spread.
     #
@@ -191,8 +196,10 @@ def spark_leg(
     # untouched cluster defaults.
     applied = tune_for_input(spark, [f"{sf_dir}/{t}.parquet" for t in TABLES])
     print(f"# {tag} session conf: {applied}", file=sys.stderr, flush=True)
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     timings: dict[str, dict] = {}
     for name in names:
+        c0 = compiled.getCount()
         t0 = time.perf_counter()
         df = REGISTRY[name].fn(spark, sf_dir)
         build = time.perf_counter() - t0
@@ -201,6 +208,8 @@ def spark_leg(
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
+            if len(samples) == 1:
+                c1 = compiled.getCount()
         for _ in range(_reps_for(min(samples), reps) - reps):
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
@@ -210,6 +219,8 @@ def spark_leg(
             "med": round(_median(samples), 3),
             "build": round(build, 3),
             "reps": len(samples),
+            "compiles": c1 - c0,
+            "recompiles": compiled.getCount() - c1,
         }
         print(f"# {tag} {name}: {timings[name]}", file=sys.stderr, flush=True)
     return timings
@@ -258,6 +269,8 @@ def leg_summary(timings: dict, duck: dict, sf: str) -> dict:
         "queries_median": {n: v["med"] for n, v in timings.items()},
         "queries_build": {n: v["build"] for n, v in timings.items()},
         "reps": {n: v["reps"] for n, v in timings.items()},
+        "queries_compiles": {n: v["compiles"] for n, v in timings.items()},
+        "queries_recompiles": {n: v["recompiles"] for n, v in timings.items()},
         "sf": sf,
     }
     if duck:

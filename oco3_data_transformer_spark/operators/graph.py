@@ -40,7 +40,11 @@ from pyspark.sql import functions as F
 # FIFO cap keeps the caches that make repeated executions of the SAME
 # DataFrame fast (the bench pattern: build once, execute N times) while
 # evicting tables from calls old enough that nothing re-executes them;
-# an evicted cache is a recompute, never a correctness change.
+# an evicted cache is a recompute, never a correctness change. A repeated
+# call persists a plan that may still be cached: Spark shares one cache
+# entry between the two frames, and unpersisting the evicted one would
+# drop the entry the newer frame still reads, so an evicted frame whose
+# plan a newer entry shares stays cached.
 _PERSISTED_FIFO: list[DataFrame] = []
 _PERSISTED_CAP = 8
 
@@ -49,7 +53,9 @@ def _persist_bounded(df: DataFrame) -> DataFrame:
     df = df.persist()
     _PERSISTED_FIFO.append(df)
     while len(_PERSISTED_FIFO) > _PERSISTED_CAP:
-        _PERSISTED_FIFO.pop(0).unpersist(blocking=False)
+        old = _PERSISTED_FIFO.pop(0)
+        if not any(old.sameSemantics(x) for x in _PERSISTED_FIFO):
+            old.unpersist(blocking=False)
     return df
 
 

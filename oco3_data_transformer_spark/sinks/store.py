@@ -175,13 +175,16 @@ def merge(
     reference's orchestrator does, ref tools/deploy/run.py:315-331); this
     variant is safe when the batch carries just the late granule's slices.
 
-    The merged rows are localCheckpoint-ed before the overwrite so the write
-    does not lazily re-read the files it is replacing."""
+    The batch rows are materialized once (``localCheckpoint``) before their
+    three consumers — the touched partitions, the anti-join and the union —
+    so ``df``'s plan executes once per call, as in :func:`append`. The merged
+    rows are localCheckpoint-ed before the overwrite so the write does not
+    lazily re-read the files it is replacing."""
     a = _adapter(adapter)
 
     def cycle() -> None:
         with a.write_lock(path):
-            new = _with_day(df.dropDuplicates(SLICE_KEY))
+            new = _with_day(df.dropDuplicates(SLICE_KEY)).localCheckpoint(eager=True)
             if a.exists(spark, path):
                 existing = a.read(spark, path)
                 touched = new.select(*PARTITION_COLS).distinct()

@@ -79,3 +79,27 @@ def test_persist_fifo_bounds_cached_tables(spark):
     # drain: everything unpersists cleanly
     while G._PERSISTED_FIFO:
         G._PERSISTED_FIFO.pop().unpersist(blocking=False)
+
+
+def test_persist_fifo_keeps_a_cache_a_newer_entry_shares(spark):
+    """A repeated call persists a plan that is still cached, and Spark
+    shares one cache entry between the two frames: evicting the older
+    frame must not unpersist the entry the newer one reads. An evicted
+    frame that nothing newer shares is still unpersisted."""
+    from pyspark import StorageLevel
+
+    from oco3_data_transformer_spark.operators import graph as G
+
+    def frame(k):
+        return spark.range(10).selectExpr(f"id * {k} AS x")
+
+    G._PERSISTED_FIFO.clear()
+    G._persist_bounded(frame(2))
+    for k in range(3, G._PERSISTED_CAP + 2):
+        G._persist_bounded(frame(k))
+    again = G._persist_bounded(frame(2))  # evicts the first frame(2)
+    assert again.storageLevel != StorageLevel.NONE
+    G._persist_bounded(frame(100))  # evicts frame(3)
+    assert frame(3).storageLevel == StorageLevel.NONE
+    while G._PERSISTED_FIFO:
+        G._PERSISTED_FIFO.pop().unpersist(blocking=False)

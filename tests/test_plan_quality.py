@@ -1068,27 +1068,46 @@ def test_grid_kernel_exchange_is_not_coalesced(spark):
     assert len(pids) == 8, (pids, plan)
 
 
+def _executions(spark) -> dict[int, str]:
+    """Every SQL execution's physical plan text, by execution id (the SQL
+    status store, as the benchmark's store.input_execs_per_write reads)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[int(e.executionId())] = str(e.physicalPlanDescription())
+    return out
+
+
 def test_store_append_executes_slices_once(spark, oco3_day):
     """store.append materializes its input once: of the SQL executions it
-    runs, exactly one contains the grid kernel (read from the SQL status
-    store, as the benchmark's store.input_execs_per_write is)."""
+    runs, exactly one contains the grid kernel."""
     from oco3_data_transformer_spark.sinks import store as store_ops
 
-    status = spark._jsparkSession.sharedState().statusStore()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-
-    def executions() -> dict[int, str]:
-        bus.waitUntilEmpty()
-        it = status.executionsList().iterator()
-        out = {}
-        while it.hasNext():
-            e = it.next()
-            out[int(e.executionId())] = str(e.physicalPlanDescription())
-        return out
-
     slices = _day_slices(spark, oco3_day)
-    seen = executions()
+    seen = _executions(spark)
     assert store_ops.append(spark, slices, oco3_day.store_path) > 0
-    plans = [p for i, p in executions().items() if i not in seen]
+    plans = [p for i, p in _executions(spark).items() if i not in seen]
     assert len(plans) >= 2  # the materialization, then the count and the write
     assert sum("fit_partition(" in p for p in plans) == 1
+
+
+def test_store_merge_executes_slices_once(spark, oco3_day):
+    """store.merge into an existing store materializes its batch once
+    before the touched partitions, the anti-join and the union read it:
+    across merge's SQL executions, one executed plan node is the grid
+    kernel (read from each execution's final plan graph)."""
+    from oco3_data_transformer_spark.sinks import store as store_ops
+
+    store_ops.append(spark, _day_slices(spark, oco3_day), oco3_day.store_path)
+    slices = _day_slices(spark, oco3_day)
+    seen = _executions(spark)
+    store_ops.merge(spark, slices, oco3_day.store_path)
+    status = spark._jsparkSession.sharedState().statusStore()
+    kernels = 0
+    for i in set(_executions(spark)) - set(seen):
+        nodes = status.planGraph(i).allNodes().iterator()
+        while nodes.hasNext():
+            kernels += "fit_partition(" in str(nodes.next().desc())
+    assert kernels == 1

@@ -80,3 +80,36 @@ def test_missing_paths_count_as_empty(spark, tmp_path):
     assert int(applied["spark.sql.shuffle.partitions"]) == 8
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+
+
+def test_repeated_queries_compile_no_class_twice(spark):
+    """A session that repeats its work compiles each generated class once.
+    q42 and q119 together generate more classes (~80 + ~47) than Spark's
+    default 100-entry codegen cache holds, so at that default every repeat
+    recompiled them all; get_spark sizes the cache to the working set."""
+    from __spark_entry__ import SMOKE_SF_DIR as sf
+    from oco3_data_transformer_spark.catalog import REGISTRY
+    from oco3_data_transformer_spark.sources.registry import TABLES
+
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    names = ["q42_oco3_pipeline", "q119_neardup_graph_triangles"]
+
+    def run_all() -> int:
+        before = compiled.getCount()
+        for name in names:
+            REGISTRY[name].fn(spark, sf).write.format("noop").mode("overwrite").save()
+        return compiled.getCount() - before
+
+    restore = {k: spark.conf.get(k) for k in (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.files.maxPartitionBytes",
+    )}
+    try:
+        tune_for_input(spark, [f"{sf}/{t}.parquet" for t in TABLES])
+        run_all()
+        assert run_all() == 0
+    finally:
+        for k, v in restore.items():
+            spark.conf.set(k, v)
+        spark.catalog.clearCache()
