@@ -204,11 +204,11 @@ def spark_leg(
         df = REGISTRY[name].fn(spark, sf_dir)
         build = time.perf_counter() - t0
         samples = []
-        for _ in range(reps):
+        for i in range(reps):
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
-            if len(samples) == 1:
+            if i == 0:
                 c1 = compiled.getCount()
         for _ in range(_reps_for(min(samples), reps) - reps):
             t0 = time.perf_counter()

@@ -71,8 +71,8 @@ def get_spark(
         # Generated-class cache (static conf: builder only). The default
         # 100-entry LRU thrashes on every recurring working set: one OCO-3
         # run_batch day compiles ~100 classes, one perfbench catalog pass
-        # 183, the whole 132-query catalog 1,803 distinct ones. At 100 a
-        # repeat compiles them all again; at 4096 it compiles ~0, for
+        # 183, the whole 132-query catalog 1,803. At 100 a repeat
+        # compiles them all again; at 4096 it compiles ~0, for
         # ~15 MB more Metaspace and ~18 MB more code heap after a
         # whole-catalog pass.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
