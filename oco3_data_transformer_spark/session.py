@@ -73,7 +73,7 @@ def get_spark(
         # run_batch day compiles ~100 classes, one perfbench catalog pass
         # 183, the whole 132-query catalog 1,803. At 100 a repeat
         # compiles them all again; at 4096 it compiles ~0, for
-        # ~15 MB more Metaspace and ~18 MB more code heap after a
+        # ~15 MB more Metaspace and ~16 MB more code heap after a
         # whole-catalog pass.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
