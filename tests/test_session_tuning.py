@@ -84,7 +84,7 @@ def test_missing_paths_count_as_empty(spark, tmp_path):
 
 def test_repeated_queries_compile_no_class_twice(spark):
     """A session that repeats its work compiles each generated class once.
-    q42 and q119 together generate more classes (~80 + ~47) than Spark's
+    q42 and q119 together compile more classes (76 + 80) than Spark's
     default 100-entry codegen cache holds, so at that default every repeat
     recompiled them all; get_spark sizes the cache to the working set."""
     from __spark_entry__ import SMOKE_SF_DIR as sf
