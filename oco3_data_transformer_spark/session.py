@@ -103,7 +103,8 @@ def tune_for_input(spark, paths: list[str] | str) -> dict[str, str]:
     is neutral-to-better at the 10x fixture and NOT applied at >=1 GiB).
     This helper sizes ``spark.sql.shuffle.partitions`` to the measured
     input (one ~8 MiB partition target, floor 8, cap = the session
-    default) and disables AQE only under :data:`SMALL_INPUT_BYTES`.
+    default; the cap binds over the floor, so a session default below 8
+    is the width) and disables AQE only under :data:`SMALL_INPUT_BYTES`.
     Inputs at or above the threshold get the untouched cluster defaults —
     at 100 TB this function is a no-op by construction, so nothing here
     trades scale robustness for microbenchmark latency.
@@ -140,7 +141,7 @@ def tune_for_input(spark, paths: list[str] | str) -> dict[str, str]:
             "spark.sql.files.maxPartitionBytes": str(int(split)),
         }
     else:
-        parts = max(8, min(DEFAULT_SHUFFLE_PARTITIONS, total // _PARTITION_TARGET_BYTES))
+        parts = min(DEFAULT_SHUFFLE_PARTITIONS, max(8, total // _PARTITION_TARGET_BYTES))
         applied = {
             "spark.sql.adaptive.enabled": "false",
             "spark.sql.shuffle.partitions": str(int(parts)),

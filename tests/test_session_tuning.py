@@ -18,7 +18,9 @@ def test_small_input_reduces_width_and_disables_aqe(spark, tmp_path):
     spark.range(100).write.parquet(p)
     applied = tune_for_input(spark, [p])
     assert applied["spark.sql.adaptive.enabled"] == "false"
-    assert 8 <= int(applied["spark.sql.shuffle.partitions"]) <= DEFAULT_SHUFFLE_PARTITIONS
+    # floor 8, cap = the session default; the cap binds when it is below 8
+    width = int(applied["spark.sql.shuffle.partitions"])
+    assert min(8, DEFAULT_SHUFFLE_PARTITIONS) <= width <= DEFAULT_SHUFFLE_PARTITIONS
     # scan fan-out: small inputs also shrink the split size so the map
     # side uses the cores (PERF.md r7)
     assert int(applied["spark.sql.files.maxPartitionBytes"]) == 4 << 20
@@ -77,9 +79,24 @@ def test_large_input_split_sizing_is_parallelism_aware(spark, tmp_path, monkeypa
 def test_missing_paths_count_as_empty(spark, tmp_path):
     applied = tune_for_input(spark, [str(tmp_path / "absent.parquet")])
     assert applied["spark.sql.adaptive.enabled"] == "false"
-    assert int(applied["spark.sql.shuffle.partitions"]) == 8
+    assert int(applied["spark.sql.shuffle.partitions"]) == min(8, DEFAULT_SHUFFLE_PARTITIONS)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+
+
+def test_small_input_width_is_capped_by_a_session_default_below_8(spark, tmp_path, monkeypatch):
+    """On a box with fewer than 8 cores the session default is the cap:
+    the small-input branch never widens the shuffle past the width a
+    >= 1 GiB input keeps."""
+    p = str(tmp_path / "t.parquet")
+    spark.range(100).write.parquet(p)
+    monkeypatch.setattr(sess_mod, "DEFAULT_SHUFFLE_PARTITIONS", 4)
+    applied = tune_for_input(spark, [p])
+    assert applied["spark.sql.adaptive.enabled"] == "false"
+    assert int(applied["spark.sql.shuffle.partitions"]) == 4
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 << 20))
 
 
 def test_repeated_queries_compile_no_class_twice(spark):
