@@ -196,14 +196,12 @@ _Q130_SQL = _Q126_SQL.replace("TRUE AS lin_ok", "TRUE AS cubic_ok")
     "predicts every |interp − plane| <= 1e-6 verdict true; non-affine "
     "behaviour (affine invariance, median-transversal linear derivative, "
     "quadratic precision with exact gradients, C1 at vertices/internal "
-    "edges) is pinned by the kernel property suite. Since round 9 the "
-    "kernel evaluates Powell's affine-invariant g=-1/2 reduced CT "
-    "element with scipy's exact interpnd formulas (round 8 had used the "
-    "edge-perpendicular reduction, which is globally C1 but NOT "
-    "affine-invariant and hence NOT scipy's element — ADVICE r8 high); "
-    "values match scipy to float rounding, bit-parity stays "
-    "unverifiable without the wheel, so allow_fallback=False still "
-    "raises. "
+    "edges) is pinned by the kernel property suite. The kernel "
+    "evaluates Powell's affine-invariant g=-1/2 reduced CT element with "
+    "scipy's exact interpnd formulas, so values match scipy to float "
+    "rounding (skip-gated differential in tests/test_ready_goldens.py); "
+    "it is the only cubic path, with no scipy branch, so the result does "
+    "not depend on which libraries are importable. "
     "ref processors/OCO3SamProcessor.py:161-182 (griddata method='cubic').",
 )
 def q130(spark: SparkSession, sf: str) -> DataFrame:

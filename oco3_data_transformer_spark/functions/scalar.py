@@ -117,25 +117,14 @@ def centroid_bbox_degrees(
 ) -> Column:
     """C7 (degree-offset variant): centroid → square bbox struct by plain
     degree offsets (ref tools/bbox-tools/targetsToJson.py:35-49 implements
-    both a WGS84 geodesic forward-azimuth version — pyproj, gated below —
-    and this degree-offset fallback; tool-side only in the reference)."""
+    both a WGS84 geodesic forward-azimuth version, through pyproj, and
+    this degree-offset fallback; tool-side only in the reference)."""
     return F.struct(
         (lon - half_deg).alias("min_lon"),
         (lat - half_deg).alias("min_lat"),
         (lon + half_deg).alias("max_lon"),
         (lat + half_deg).alias("max_lat"),
     )
-
-
-def centroid_bbox_geodesic(lon: Column, lat: Column, half_m: float) -> Column:
-    """C7 geodesic variant: requires pyproj (unavailable here)."""
-    try:  # pragma: no cover - optional dependency
-        import pyproj  # type: ignore  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "geodesic bbox requires pyproj; use centroid_bbox_degrees"
-        ) from e
-    raise NotImplementedError("wire pyproj.Geod.fwd in a pandas UDF here")
 
 
 def iso8601(ts: Column) -> Column:

@@ -15,10 +15,10 @@ Spark-first design:
     distance in lon/lat space, matching scipy's KD-tree result up to ties).
   - 'linear' runs a pure-numpy Delaunay + barycentric kernel
     (operators/interp.py) that reproduces scipy.griddata(method='linear')
-    semantics — no scipy needed. 'cubic' uses scipy's Clough-Tocher when
-    importable, else the pure-numpy implementation of the same element
-    (Powell's affine-invariant reduction, interp.cubic_griddata) when
-    ``allow_fallback`` else raises NotImplementedError.
+    semantics; 'cubic' runs the pure-numpy implementation of scipy's
+    Clough-Tocher element (Powell's affine-invariant reduction,
+    interp.cubic_griddata). There is one code path per method, whatever
+    libraries are importable.
   - the target-focused footprint mask (G6/J4) runs inside the same kernel:
     the rows are partitioned on the mask key (qf, region), each mask
     group's footprint rings are stacked once, and every grid sub-group's
@@ -42,14 +42,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - scipy absent in this environment
-    from scipy.interpolate import griddata as _scipy_griddata  # type: ignore
-
-    HAVE_SCIPY = True
-except Exception:  # pragma: no cover
-    _scipy_griddata = None
-    HAVE_SCIPY = False
 
 MIN_POINTS_FOR_LINEAR = 4  # ref processors/OCO3SamProcessor.py:153-159
 
@@ -92,7 +84,7 @@ def nearest_gridder(
 def grid_points(
     pts_lon: np.ndarray, pts_lat: np.ndarray, values: np.ndarray,
     mesh_lon: np.ndarray, mesh_lat: np.ndarray,
-    method: str = "nearest", allow_fallback: bool = True,
+    method: str = "nearest",
 ) -> np.ndarray:
     """G1 kernel with G3 fallback semantics: linear/cubic need >= 4 points
     else 'nearest' (ref processors/OCO3SamProcessor.py:153-159). NaN fill
@@ -105,23 +97,6 @@ def grid_points(
     if method in ("linear", "cubic") and len(values) < MIN_POINTS_FOR_LINEAR:
         eff = "nearest"
     if eff == "cubic":
-        if HAVE_SCIPY:
-            glon, glat = np.meshgrid(mesh_lon, mesh_lat)
-            return _scipy_griddata(
-                np.column_stack([pts_lon, pts_lat]), values, (glon, glat),
-                method="cubic", fill_value=np.nan,
-            )
-        if not allow_fallback:
-            raise NotImplementedError(
-                "bit-verified scipy 'cubic' needs the scipy wheel; pass "
-                "allow_fallback=True for the numpy implementation of the "
-                "same reduced Clough-Tocher element (Nielson gradients, "
-                "centroid split, Powell's affine-invariant g=-1/2 "
-                "reduction — scipy's exact interpnd formulas, "
-                "operators/interp.cubic_griddata; matches scipy to float "
-                "rounding, but bit-parity is unverifiable without the "
-                "wheel: skip-gated differential in tests/test_ready_goldens)"
-            )
         from .interp import cubic_griddata
 
         return cubic_griddata(pts_lon, pts_lat, values, mesh_lon, mesh_lat)
@@ -211,7 +186,7 @@ def grid_regions(
         }
         for k in region_keys:
             out[k] = np.repeat(pdf[k].iloc[0], lat_res * lon_res)
-        if method in ("linear", "cubic") and not HAVE_SCIPY and len(value_cols) > 1:
+        if method in ("linear", "cubic") and len(value_cols) > 1:
             # multi-variable fast path: columns sharing a finite-mask share
             # ONE triangulation + mesh point-location (the pipeline grids
             # 2-3 science variables per region; re-triangulating per
@@ -230,9 +205,7 @@ def grid_regions(
             for mkey, cols in masks.items():
                 good = np.frombuffer(mkey, dtype=bool)
                 n_good = int(good.sum())
-                if n_good == 0 or (
-                    method == "linear" and n_good < MIN_POINTS_FOR_LINEAR
-                ) or (method == "cubic" and n_good < MIN_POINTS_FOR_LINEAR):
+                if n_good < MIN_POINTS_FOR_LINEAR:
                     for c in cols:  # per-column fallback semantics
                         out[c] = grid_points(
                             plon, plat, vals_by_col[c], mesh_lon, mesh_lat,

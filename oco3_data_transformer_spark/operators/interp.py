@@ -1,11 +1,11 @@
-"""Pure-numpy 2-D Delaunay triangulation + piecewise-linear interpolation.
-
-Closes the last semantic gap of the G1 gridding kernel: the reference runs
-``scipy.interpolate.griddata(..., method='linear')`` (ref
+"""Pure-numpy 2-D Delaunay triangulation + piecewise-linear and
+Clough-Tocher cubic interpolation: the G1 gridding kernel's only 'linear'
+and 'cubic' paths. The reference runs
+``scipy.interpolate.griddata(..., method='linear'|'cubic')`` (ref
 processors/OCO3SamProcessor.py:161-182), which is Qhull Delaunay +
-barycentric interpolation, NaN outside the convex hull. scipy has no wheel
-reachable from this environment (install attempt documented in ROADMAP.md),
-so the same math is implemented here from the public textbook algorithms.
+barycentric (or Clough-Tocher) interpolation, NaN outside the convex hull.
+The same math is implemented here from the public textbook algorithms, so
+the gridded output does not depend on whether scipy is importable.
 
 Robustness design (each choice pinned by a regression in
 tests/test_delaunay.py — both alternatives were tried and failed):
@@ -52,7 +52,6 @@ from __future__ import annotations
 import numpy as np
 
 _EPS_CIRCUM = 1e-12  # relative slack on the in-circumcircle test
-_EPS_ORIENT = 1e-12  # on-line band for visibility tests (normalized coords)
 _JITTER = 1e-9  # symbolic-style perturbation (normalized coords)
 _EPS_COLLINEAR = 1e-9  # pre-jitter degenerate-input gate (normalized)
 _EPS_INSIDE = 1e-6  # barycentric inside-slack (normalized; covers jitter)
@@ -193,8 +192,13 @@ def _triangulate(p: np.ndarray, init: tuple[int, int, int]) -> np.ndarray:
             q[0] - a[:, 0]
         )
         # visibility: for a convex hull the conflicting edge set is
-        # exactly the visible chain, so the cavity stays star-shaped
-        bad_inf = ori > -_EPS_ORIENT
+        # exactly the visible chain, so the cavity stays star-shaped.
+        # Strict sign, no slack: the jitter already puts every point off
+        # every hull line, and a slack band wider than the float error
+        # (~1e-16) counts an interior point as outside a hull edge it
+        # nearly extends (a lattice column within 1e-12 of collinear),
+        # building a non-Delaunay sliver that later cavities overlap
+        bad_inf = ori > 0.0
         if not (bad_fin.any() or bad_inf.any()):
             continue  # cannot happen on unique jittered input
         # boundary = edges appearing exactly once in the cavity, found on
@@ -465,7 +469,6 @@ def cubic_interpolate(
     qx: np.ndarray,
     qy: np.ndarray,
     gradients: np.ndarray | None = None,
-    element: str = "scipy",
 ) -> np.ndarray:
     """Piecewise-CUBIC scattered-data interpolation: a reduced
     Clough-Tocher element on the Delaunay triangulation, with
@@ -473,39 +476,25 @@ def cubic_interpolate(
     convex hull. (Ref processors/OCO3SamProcessor.py:161-182 executes
     scipy's griddata cubic = CloughTocher2DInterpolator.)
 
-    Shared construction (Clough-Tocher 1965; Farin 1986, "Triangular
+    Construction (Clough-Tocher 1965; Farin 1986, "Triangular
     Bernstein-Bézier patches"): each macro-triangle (V1,V2,V3) is split
     at the centroid Vc into three cubic Bézier mini-patches. The 12 dofs
     are vertex values+gradients (9) plus one cross-derivative per outer
     edge (3), fixed by a reduction condition: the derivative in a chosen
     TRANSVERSAL direction w varies LINEARLY along each outer edge. The
-    reduced-CT family is parametrized by that direction, and the two
-    classically sensible choices trade off exact smoothness against
-    affine invariance — you cannot have both (within the affine-covariant
-    family w = median + g·edge, the cross-macro-edge normal-derivative
-    matching condition fails for every g; only the edge NORMAL satisfies
-    it, and the normal is not affine-covariant):
-
-    - ``element="scipy"`` (default — the reference-parity element):
-      Powell's affine-invariant choice, w = the median direction
-      (g1=g2=g3=-1/2 in scipy's ``interpnd.pyx _clough_tocher_2d_single``
-      parametrization). Identical formulas to scipy, so fallback output
-      matches scipy's CloughTocher2DInterpolator to float rounding
-      (skip-gated differential in tests/test_ready_goldens.py).
-      Affine-invariant (no oscillation blow-up on sliver triangles —
-      scipy's stated reason for rejecting the normal), C1 at vertices
-      and across the three internal edges, exactly C1 across macro
-      edges only where the edge restriction is quadratic (e.g. global
-      quadratic fields); elsewhere the cross-edge normal derivative has
-      a bounded O(h·curvature) jump — a property scipy's element shares
-      by construction even though its docstring says "C1".
-    - ``element="c1"``: the textbook reduced-HCT choice, w = edge
-      perpendicular. Globally exactly C1 (test_delaunay pins it), but
-      NOT affine-invariant and known to oscillate on high-aspect
-      slivers; diverges from scipy on non-quadratic data.
-
-    Both reproduce quadratics exactly given exact gradients and
-    interpolate values and gradients at the vertices."""
+    element is Powell's affine-invariant choice, w = the median direction
+    (g1=g2=g3=-1/2 in scipy's ``interpnd.pyx _clough_tocher_2d_single``
+    parametrization). Identical formulas to scipy, so the output matches
+    scipy's CloughTocher2DInterpolator to float rounding (skip-gated
+    differential in tests/test_ready_goldens.py). Affine-invariant (no
+    oscillation blow-up on sliver triangles — scipy's stated reason for
+    rejecting the edge normal), C1 at vertices and across the three
+    internal edges, exactly C1 across macro edges only where the edge
+    restriction is quadratic (e.g. global quadratic fields); elsewhere
+    the cross-edge normal derivative has a bounded O(h·curvature) jump —
+    a property scipy's element shares by construction even though its
+    docstring says "C1". It reproduces quadratics exactly given exact
+    gradients and interpolates values and gradients at the vertices."""
     values = np.asarray(values, dtype=np.float64)
     qx = np.asarray(qx, dtype=np.float64)
     qy = np.asarray(qy, dtype=np.float64)
@@ -528,86 +517,12 @@ def cubic_interpolate(
     qyn = (qy - lo[1]) / span
     loc = _locate(p, tri, qxn, qyn)
     found = loc[0]
-    res = _ct_eval(p, tri, vals, g, loc, element)
+    res = _ct_eval(p, tri, vals, g, loc)
     out[found] = res[found]
     return out
 
 
 def _ct_eval(
-    p: np.ndarray,
-    tri: np.ndarray,
-    vals: np.ndarray,
-    g: np.ndarray,
-    loc: tuple,
-    element: str = "scipy",
-) -> np.ndarray:
-    """Evaluate a reduced Clough-Tocher element (see
-    :func:`cubic_interpolate` for the construction and the
-    scipy-vs-c1 element choice) at located queries.
-    `loc` is :func:`_locate` output; entries where found=False carry
-    garbage and must be masked by the caller."""
-    if element == "scipy":
-        return _ct_eval_scipy(p, tri, vals, g, loc)
-    if element != "c1":
-        raise ValueError(f"unknown CT element {element!r}")
-    found, ti, l1, l2, l3 = loc
-    # --- per-triangle control net (vectorized over triangles) --------
-    P = p[tri]  # (nt, 3, 2) corner positions
-    F = vals[tri]  # (nt, 3) corner values
-    G = g[tri]  # (nt, 3, 2) corner gradients
-    Vc = P.mean(axis=1)  # (nt, 2) centroid split point
-    # outer-edge ring: E[t, i, j] = f_i + (V_j - V_i)·g_i / 3
-    E = F[:, :, None] + np.einsum(
-        "tijd,tid->tij", P[:, None, :, :] - P[:, :, None, :], G
-    ) / 3.0
-    # internal ring 1: a_i = f_i + (Vc - V_i)·g_i / 3
-    A = F + ((Vc[:, None, :] - P) * G).sum(-1) / 3.0
-    # mini-patch interiors s_k (k = 0,1,2 opposite vertex k; outer edge
-    # (i, j) = (k+1, k+2) mod 3) via the linear-⊥-derivative condition
-    S = np.empty((len(tri), 3))
-    for k in range(3):
-        i, j = (k + 1) % 3, (k + 2) % 3
-        e = P[:, j] - P[:, i]
-        du = ((Vc - P[:, j]) * e).sum(-1)
-        dv = ((P[:, i] - Vc) * e).sum(-1)
-        dw = (e * e).sum(-1)
-        S[:, k] = (
-            du * (F[:, i] - 2.0 * E[:, i, j] + E[:, j, i])
-            + dv * (E[:, i, j] - 2.0 * E[:, j, i] + F[:, j])
-            + dw * (A[:, i] + A[:, j])
-        ) / (2.0 * dw)
-    # internal ring 2 and centroid ordinate (C1 across internal edges)
-    Q = (A + S.sum(axis=1, keepdims=True) - S) / 3.0
-    c0 = Q.mean(axis=1)
-    # --- evaluation: pick the mini-triangle, gather its 10 controls ---
-    L = np.column_stack([l1, l2, l3])
-    k = np.argmin(L, axis=1)  # query lies in mini opposite vertex k
-    i, j = (k + 1) % 3, (k + 2) % 3
-    rows = np.arange(len(k))
-    al = L[rows, i] - L[rows, k]
-    be = L[rows, j] - L[rows, k]
-    ga = 3.0 * L[rows, k]
-    t = ti
-    b300, b030, b003 = F[t, i], F[t, j], c0[t]
-    b210, b120 = E[t, i, j], E[t, j, i]
-    b201, b021 = A[t, i], A[t, j]
-    b102, b012 = Q[t, i], Q[t, j]
-    b111 = S[t, k]
-    return (
-        b300 * al**3
-        + b030 * be**3
-        + b003 * ga**3
-        + 3.0 * b210 * al**2 * be
-        + 3.0 * b120 * al * be**2
-        + 3.0 * b201 * al**2 * ga
-        + 3.0 * b021 * be**2 * ga
-        + 3.0 * b102 * al * ga**2
-        + 3.0 * b012 * be * ga**2
-        + 6.0 * b111 * al * be * ga
-    )
-
-
-def _ct_eval_scipy(
     p: np.ndarray,
     tri: np.ndarray,
     vals: np.ndarray,
@@ -707,11 +622,10 @@ def cubic_griddata(
     values: np.ndarray,
     mesh_lon: np.ndarray,
     mesh_lat: np.ndarray,
-    element: str = "scipy",
 ) -> np.ndarray:
-    """griddata(method='cubic')-shaped fallback over a rectangular mesh
-    (see :func:`cubic_interpolate` for the scipy-vs-c1 element choice):
-    (n_lat, n_lon), NaN outside the convex hull."""
+    """griddata(method='cubic') over a rectangular mesh (the element is
+    described in :func:`cubic_interpolate`): (n_lat, n_lon), NaN outside
+    the convex hull."""
     glon, glat = np.meshgrid(
         np.asarray(mesh_lon, dtype=np.float64),
         np.asarray(mesh_lat, dtype=np.float64),
@@ -723,7 +637,6 @@ def cubic_griddata(
         values,
         glon.ravel(),
         glat.ravel(),
-        element=element,
     )
     return flat.reshape(glat.shape)
 
@@ -790,11 +703,11 @@ class TriangulatedField:
         out[found] = res[found]
         return out
 
-    def cubic(self, values: np.ndarray, element: str = "scipy") -> np.ndarray:
+    def cubic(self, values: np.ndarray) -> np.ndarray:
         vals = np.asarray(values, np.float64)[self.keep]
         g = estimate_gradients(self.p, self.tri, vals)
         found = self._loc[0]
-        res = _ct_eval(self.p, self.tri, vals, g, self._loc, element)
+        res = _ct_eval(self.p, self.tri, vals, g, self._loc)
         out = np.full(len(found), np.nan)
         out[found] = res[found]
         return out

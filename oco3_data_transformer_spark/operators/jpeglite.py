@@ -27,10 +27,8 @@ the Annex K example tables) that covers real-world baseline files:
     plain EOB keeps the stream legal at a small size cost).
 
 Out of scope (raises with a clear message): arithmetic coding, 12-bit
-precision, 4-component (CMYK) scans, hierarchical (SOF5+) frames.  PIL
-remains preferred when importable — operators/multimodal.decode_image
-tries it first; this is the wheel-free fallback, the same contract every
-other codec in the repo follows.
+precision, 4-component (CMYK) scans, hierarchical (SOF5+) frames.  This
+is operators/multimodal.decode_image's only JPEG decoder.
 
 Decode correctness is established the same way as the other from-spec
 codecs: marker-level spec goldens, an exactness property (flat blocks are

@@ -11,8 +11,8 @@ WebP (VP8) decodes through the system ``libwebp.so`` via ctypes
 (operators/syscodecs.py, feature-detected — also the live differential
 proving webplite's VP8L interop, tests/test_syscodecs.py); compressed
 audio ('mp3') still raises ``NotImplementedError`` at the decode
-boundary (no system codec library shipped), nothing else changes. PIL is
-preferred for jpeg/webp when importable.
+boundary (no system codec library shipped), nothing else changes. Each
+codec has one decoder, whatever image libraries are importable.
 
 Design notes for 100 TB of blobs:
   - blobs never pass through a shuffle: decode → feature/resize → encode all
@@ -183,77 +183,33 @@ def png_decode(payload: bytes) -> np.ndarray:
     return out.astype(np.uint8).reshape(h, w, ch)
 
 
-def _pil_decode(payload: bytes) -> np.ndarray | None:
-    """Decode via PIL when importable AND capable, else None — never
-    raises. Feature-absence (a PIL built without WEBP support) and
-    per-stream failures (UnidentifiedImageError on a VP8L file PIL
-    doesn't recognize) both fall back to the from-spec decoders, which
-    keeps decode availability independent of how the wheel was built
-    (ADVICE r8 low). Output normalized to (H, W, C) uint8."""
-    try:  # pragma: no cover - optional dependency preferred
-        import io as _io
-
-        from PIL import Image  # type: ignore
-    except ImportError:
-        return None
-    try:  # pragma: no cover - optional dependency preferred
-        arr = np.asarray(Image.open(_io.BytesIO(payload)))
-    except Exception:
-        return None
-    return arr[:, :, None] if arr.ndim == 2 else arr
-
-
 def decode_image(codec: str, payload: bytes, width: int, height: int, channels: int) -> np.ndarray:
     """Decode one blob to (H, W, C) uint8. 'raw', 'png', 'jpeg'
-    (baseline SOF0 and progressive SOF2) and lossless 'webp' (VP8L)
-    decode wheel-free ('png' via the from-spec codec above, 'jpeg' via
-    operators/jpeglite.py, 'webp' via operators/webplite.py; PIL
-    preferred for jpeg/webp when importable); the remaining codecs
-    (lossy VP8 webp, arithmetic-coded jpeg) genuinely need an image
-    library and plug in behind the same signature when one is
-    importable."""
+    (baseline SOF0 and progressive SOF2) and 'webp' decode here ('png'
+    via the from-spec codec above, 'jpeg' via operators/jpeglite.py,
+    'webp' via the system libwebp (operators/syscodecs.py, lossy VP8 and
+    lossless VP8L) when it loads, else the from-spec VP8L decoder in
+    operators/webplite.py); any other codec raises
+    NotImplementedError."""
     if codec == "raw":
         arr = np.frombuffer(payload, dtype=np.uint8)
         return arr.reshape(height, width, channels)
     if codec == "png":
         return png_decode(payload)
     if codec == "jpeg":
-        arr = _pil_decode(payload)  # pragma-free: None when PIL can't
-        if arr is None:
-            from .jpeglite import jpeg_decode
+        from .jpeglite import jpeg_decode
 
-            arr = jpeg_decode(payload)
-        return arr
+        return jpeg_decode(payload)
     if codec == "webp":
-        # PIL preferred when importable AND able (a PIL built without
-        # WEBP support, or choking on a VP8L stream, must fall through
-        # instead of crashing — ADVICE r8); then the system libwebp via
-        # ctypes (operators/syscodecs.py — the only wheel-free path that
-        # decodes LOSSY VP8, the majority of real .webp blobs); then the
-        # from-spec VP8L decoder. All paths honor the same `channels`
-        # slicing contract.
-        rgba = _pil_decode(payload)
-        if rgba is None:
-            from . import syscodecs
+        # both decoders return (H, W, 4) RGBA
+        from . import syscodecs
 
-            if syscodecs.available():
-                rgba = syscodecs.webp_decode(payload)
-            else:
-                from .webplite import webp_decode
+        if syscodecs.available():
+            rgba = syscodecs.webp_decode(payload)
+        else:
+            from .webplite import webp_decode
 
-                rgba = webp_decode(payload)
-        if rgba.shape[2] == 1:  # PIL 'L' mode: replicate to RGB
-            rgba = np.repeat(rgba, 3, axis=2)
-        elif rgba.shape[2] == 2:  # PIL 'LA' mode: split luma/alpha
-            # (ADVICE r9: a 2-channel array passed both normalization
-            # branches untouched, breaking the channels contract)
-            rgba = np.concatenate(
-                [np.repeat(rgba[:, :, :1], 3, axis=2), rgba[:, :, 1:]], axis=2
-            )
-        if rgba.shape[2] == 3:  # pad opaque alpha (webplite always RGBA)
-            rgba = np.concatenate(
-                [rgba, np.full(rgba.shape[:2] + (1,), 255, np.uint8)], axis=2
-            )
+            rgba = webp_decode(payload)
         return rgba[:, :, :channels] if channels in (1, 3) else rgba
     raise NotImplementedError(
         f"codec {codec!r} needs an image library not present in this "

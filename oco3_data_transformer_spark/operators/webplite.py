@@ -23,9 +23,9 @@ Specification (and RIFF container spec) that covers real lossless files:
     lossless round-trip oracle the PNG/WAV/FLAC codecs use.
 
 Lossy WebP (VP8 chunks) is a different format family (DCT-based) and
-raises with a clear message.  PIL remains preferred when importable —
-operators/multimodal.decode_image tries it first; this is the wheel-free
-fallback, the same contract every other codec in the repo follows.
+raises with a clear message.  operators/multimodal.decode_image uses the
+system libwebp (operators/syscodecs.py) when it loads and this decoder
+otherwise.
 
 The 120-entry distance map is generated from its ordering rule (all
 (dx, dy) neighbour offsets with dy in [0, 7], |dx| <= 8, sorted by

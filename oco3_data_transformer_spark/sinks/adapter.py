@@ -153,8 +153,8 @@ class DeltaStorageAdapter(StorageAdapter):
     """Delta Lake: ACID commit log -> true concurrent-writer safety.
 
     Import-gated: constructing it without the ``delta`` package raises
-    NotImplementedError (the sandbox ships no delta wheel; the body is the
-    real implementation, same pattern as the rasterio/xarray sinks)."""
+    NotImplementedError (no delta wheel is installed here; the body is the
+    real implementation)."""
 
     supports_concurrent_writers = True
 

@@ -2,9 +2,9 @@
 
 The reference writes NetCDF (writers/NetCDFWriter.py:26-61, zlib NetCDF4)
 and Cloud-Optimized GeoTIFF (writers/CoGWriter.py:42-248, GDAL COG driver).
-Neither wheel (xarray/h5netcdf, rasterio/GDAL) is reachable in this
-environment, so this module implements the two container FORMATS directly
-from their public specifications with numpy + stdlib zlib only:
+This module implements the container FORMATS directly from their public
+specifications with numpy + stdlib zlib only, so the export sinks need
+neither xarray/h5netcdf nor rasterio/GDAL:
 
 - :func:`write_netcdf3` — NetCDF *classic* format: the original Unidata
   on-disk spec (magic ``CDF\\x01``; dim/attr/var header lists; big-endian
@@ -23,10 +23,8 @@ from their public specifications with numpy + stdlib zlib only:
   after) — the properties the reference's COG driver enforces.
 
 Both have matching minimal readers used by the round-trip golden tests
-(and usable as sources). When the real wheels ARE importable,
-sinks/export.py still prefers them; these writers replace the former
-NotImplementedError fallback so `fmt='netcdf'` / `fmt='geotiff'` always
-produce real container bytes.
+(and usable as sources). These writers are the only encoders behind
+sinks/export.py's `fmt='netcdf'` / `fmt='netcdf4'` / `fmt='geotiff'`.
 """
 
 from __future__ import annotations

@@ -5,17 +5,16 @@ variable) slice.
 The reference writes CoG GeoTIFF per slice with latitude flipped descending
 and names ``{mission}_{target}_{ts}_{filtered}_{var}.tif``
 (ref writers/CoGWriter.py:42-248, flip :153-161) and zlib-9 NetCDF
-(ref writers/NetCDFWriter.py:26-61). rioxarray/netCDF4 are not available in
-this container, so the *format encoders* are pluggable: the default encoder
-serializes the dense array as a portable ``.npy`` byte payload (real bytes,
-real shapes — everything except the final GeoTIFF/NetCDF container bits,
-which are gated behind an import-try).
+(ref writers/NetCDFWriter.py:26-61) through rioxarray/xarray. Here the
+container bytes come from the pure-numpy format writers in
+sinks/containers.py (tiled deflate GeoTIFF with COG layout, NetCDF classic,
+zlib NetCDF4), whatever libraries are importable; the default ``'npy'``
+encoder serializes the dense array as a portable ``.npy`` byte payload.
 
-Spark-side plumbing is the real thing either way: one ``applyInPandas``
-group per slice, densification from sparse long rows with NaN fill,
-deterministic latitude-descending row order, output as a binary column the
-caller sinks wherever (object store via foreachPartition, a BLOB table, a
-manifest parquet).
+Spark-side plumbing: one ``applyInPandas`` group per slice, densification
+from sparse long rows with NaN fill, deterministic latitude-descending row
+order, output as a binary column the caller sinks wherever (object store
+via foreachPartition, a BLOB table, a manifest parquet).
 """
 
 from __future__ import annotations
@@ -27,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .containers import write_geotiff, write_netcdf3, write_netcdf4
 
 SLICE_COLS = ["mission", "target_id", "qf", "time", "variable"]
 
@@ -63,150 +64,11 @@ def _npy_bytes(arr: np.ndarray) -> bytes:
     return buf.getvalue()
 
 
-def encode_geotiff(
-    arr: np.ndarray,
-    bounds: tuple[float, float, float, float] | None = None,
-    driver_kwargs: dict | None = None,
-) -> bytes:  # pragma: no cover - optional dep, golden-tested when present
-    """S8 final container encode: Cloud-Optimized GeoTIFF
-    (ref writers/CoGWriter.py:42-248), EPSG:4326, row 0 = northernmost (the
-    caller already flipped latitude descending), NaN nodata.
-
-    ``bounds`` are raster EDGE bounds (min_lon, min_lat, max_lon, max_lat) —
-    :func:`export_slices` derives them per slice from the target's mesh bbox
-    with the half-pixel expansion rioxarray applies to cell-center coords.
-    ``driver_kwargs`` passes COG creation options through, mirroring the
-    reference's validated driver options (ref writers/CoGWriter.py:44-50,
-    172: ``data.rio.to_raster(driver='COG', **driver_kwargs)``).
-
-    Body: write a tiled+deflate GTiff into /vsimem, build power-of-two
-    average overviews down to one tile (the CoG pyramid), then copy-convert
-    with GDAL's COG driver (which enforces the cloud-optimized layout:
-    header-first IFDs, tile ordering). Falls back to the plain tiled GTiff
-    bytes when the COG driver is unavailable. Import-gated on rasterio; the
-    golden in tests/test_ready_goldens.py activates when present.
-    """
-    try:
-        import rasterio  # type: ignore  # noqa: F401
-        from rasterio.enums import Resampling  # type: ignore
-        from rasterio.io import MemoryFile  # type: ignore
-        from rasterio.transform import from_bounds  # type: ignore
-    except ImportError:
-        # rasterio/GDAL absent: the pure-numpy writer produces a real
-        # tiled+deflate GeoTIFF with EPSG:4326 geokeys, NaN nodata,
-        # average overviews, and the COG header-first layout
-        # (sinks/containers.py, round-trip + spec-golden tested). The
-        # GDAL path above remains preferred when importable (certified
-        # COG driver output).
-        from .containers import write_geotiff
-
-        return write_geotiff(arr, bounds)
-    h, w = arr.shape
-    min_lon, min_lat, max_lon, max_lat = bounds or (-180.0, -90.0, 180.0, 90.0)
-    transform = from_bounds(min_lon, min_lat, max_lon, max_lat, w, h)
-    profile = dict(
-        driver="GTiff", height=h, width=w, count=1, dtype="float64",
-        crs="EPSG:4326", transform=transform, compress="deflate",
-        nodata=float("nan"),
-        # GDAL tile sizes must be multiples of 16; fixed 256 blocks are
-        # valid for any raster size (small rasters are padded)
-        tiled=True, blockxsize=256, blockysize=256,
-    )
-    # CoG overview pyramid: halve until the level fits in one 256 tile
-    factors = []
-    f = 2
-    while max(h, w) // f >= 256:
-        factors.append(f)
-        f *= 2
-    with MemoryFile() as mem:
-        with mem.open(**profile) as ds:
-            ds.write(arr.astype(np.float64), 1)
-            if factors:
-                ds.build_overviews(factors, Resampling.average)
-                ds.update_tags(ns="rio_overview", resampling="average")
-        try:
-            from rasterio.shutil import copy as rio_copy  # type: ignore
-
-            opts = dict(compress="deflate", blocksize=256)
-            opts.update(driver_kwargs or {})
-            with MemoryFile() as cog:
-                rio_copy(mem.name, cog.name, driver="COG", **opts)
-                return cog.read()
-        except Exception:
-            # COG create-copy driver missing (GDAL < 3.1): the tiled,
-            # overviewed, deflate GTiff is still a valid (non-certified) CoG
-            return mem.read()
-
-
-def encode_netcdf(
-    arr: np.ndarray,
-    var_name: str = "value",
-    bounds: tuple[float, float, float, float] | None = None,
-) -> bytes:  # pragma: no cover - optional dep, golden-tested when present
-    """S9 final container encode: zlib-9 NetCDF (ref
-    writers/NetCDFWriter.py:26-61) via xarray/h5netcdf; import-gated.
-    With ``bounds`` (raster EDGE bounds, as produced by export_slices) the
-    dataset carries cell-center lat/lon coordinate variables — latitude
-    DESCENDING to match the pre-flipped row order."""
-    try:
-        import xarray as xr  # type: ignore
-    except ImportError:
-        # xarray/h5netcdf absent: the pure-numpy writer produces a real
-        # NetCDF *classic* (CDF-1) file — same variables/coords/values,
-        # no internal compression (the documented delta vs the
-        # reference's zlib NetCDF4; sinks/containers.py, round-trip +
-        # spec-golden tested). The xarray path above remains preferred
-        # when importable.
-        from .containers import write_netcdf3
-
-        return write_netcdf3(arr, var_name, bounds)
-    coords = {}
-    if bounds is not None:
-        min_lon, min_lat, max_lon, max_lat = bounds
-        h, w = arr.shape
-        res_x = (max_lon - min_lon) / w
-        res_y = (max_lat - min_lat) / h
-        coords["lat"] = (max_lat - res_y / 2) - res_y * np.arange(h)
-        coords["lon"] = (min_lon + res_x / 2) + res_x * np.arange(w)
-    ds = xr.Dataset(
-        {var_name: (("lat", "lon"), arr.astype(np.float64))}, coords=coords
-    )
-    return bytes(
-        ds.to_netcdf(
-            engine="h5netcdf",
-            encoding={var_name: {"zlib": True, "complevel": 9}},
-        )
-    )
-
-
-def encode_netcdf4(
-    arr: np.ndarray,
-    var_name: str = "value",
-    bounds: tuple[float, float, float, float] | None = None,
-) -> bytes:
-    """S9 final container encode, exact reference family: zlib-9 NetCDF4
-    (HDF5 container; ref writers/NetCDFWriter.py:26-61). xarray/h5netcdf
-    when importable (full netCDF4 dimension-scale metadata); otherwise
-    the pure-numpy HDF5 writer (sinks/containers.write_netcdf4 — same
-    shuffle+deflate chunked variables, coords and _FillValue, minus
-    reference-typed dimension-scale attrs, which hdf5lite's numeric-attr
-    subset cannot express). Unlike ``fmt='netcdf'``, the wheel-free
-    fallback here keeps internal compression — the format delta the
-    classic CDF fallback documented is closed."""
-    try:
-        import xarray as xr  # type: ignore  # noqa: F401
-    except ImportError:
-        from .containers import write_netcdf4
-
-        return write_netcdf4(arr, var_name, bounds)
-    return encode_netcdf(arr, var_name, bounds)
-
-
 _SLICE_ENCODERS = {
     "npy": (lambda arr, bounds: _npy_bytes(arr), ".npy"),
-    "geotiff": (encode_geotiff, ".tif"),
-    "netcdf": (lambda arr, bounds: encode_netcdf(arr, bounds=bounds), ".nc"),
-    "netcdf4": (lambda arr, bounds: encode_netcdf4(arr, bounds=bounds), ".nc"),
+    "geotiff": (write_geotiff, ".tif"),
+    "netcdf": (lambda arr, bounds: write_netcdf3(arr, bounds=bounds), ".nc"),
+    "netcdf4": (lambda arr, bounds: write_netcdf4(arr, bounds=bounds), ".nc"),
 }
 
 
@@ -236,15 +98,11 @@ def export_slices(
 
     One Arrow-batched group per slice; slices are independent, so export
     parallelism is the number of slices. ``fmt='npy'`` is the portable
-    payload; 'geotiff'/'netcdf' emit real container bytes — via
-    rasterio/xarray when importable, else the pure-numpy format writers in
-    sinks/containers.py (tiled deflate GeoTIFF with COG layout; NetCDF
-    classic).
+    payload; 'geotiff'/'netcdf'/'netcdf4' emit real container bytes from
+    the pure-numpy format writers in sinks/containers.py (tiled deflate
+    GeoTIFF with COG layout; NetCDF classic; zlib NetCDF4).
     """
     encoder, ext = _SLICE_ENCODERS[fmt]
-    if fmt != "npy":
-        encoder(np.zeros((1, 1)), None)  # driver-side availability probe:
-        # raises NotImplementedError at plan time, not inside executor tasks
 
     bbox_cols = ["__bb_min_lon", "__bb_min_lat", "__bb_max_lon", "__bb_max_lat"]
     if target_bboxes is not None:

@@ -20,8 +20,8 @@ Spark-first design:
     one layer up.
   - the NetCDF decoder is wheel-free end-to-end: classic CDF-1/CDF-2/CDF-5
     through sinks/containers.py, NetCDF4/HDF5 through the pure-numpy
-    subset reader in sources/hdf5lite.py (xarray+h5netcdf still preferred
-    when importable); the 'npz' decoder (numpy archives, one array per
+    subset reader in sources/hdf5lite.py, whatever libraries are
+    importable; the 'npz' decoder (numpy archives, one array per
     variable — structurally a NetCDF group) remains the harness workhorse.
 """
 
@@ -67,12 +67,11 @@ def decode_netcdf(
     project variables → mask_and_scale fill→NaN). NetCDF *classic*
     (CDF-1/CDF-2/CDF-5, magic ``CDF\\x0{1,2,5}``) decodes wheel-free through the
     pure-numpy reader in sinks/containers.py; NetCDF4/HDF5 files go
-    through xarray+h5netcdf when importable, else the pure-numpy HDF5
-    subset reader (sources/hdf5lite.py — superblock v0, old-style root
-    group, numeric datasets, contiguous or chunked+shuffle+deflate: the
-    standard netCDF4 on-disk shape), so S1 no longer has a wheel-gated
-    format branch. ``_FillValue`` attributes are normalized to NaN, the
-    reference's mask_and_scale behavior."""
+    through the pure-numpy HDF5 subset reader (sources/hdf5lite.py —
+    superblock v0, old-style root group, numeric datasets, contiguous or
+    chunked+shuffle+deflate: the standard netCDF4 on-disk shape).
+    ``_FillValue``/``scale_factor``/``add_offset`` attributes are applied,
+    the reference's mask_and_scale behavior."""
     if payload[:3] == b"CDF" and payload[3] in (1, 2, 5):
         from ..sinks.containers import read_netcdf3
 
@@ -84,73 +83,53 @@ def decode_netcdf(
             v = v.astype(np.float64)  # native-endian for Arrow
             cols[n] = v if v.ndim == 1 else list(v)
         return pd.DataFrame(cols)
-    try:  # pragma: no cover - optional dependency
-        import xarray as xr  # type: ignore
-    except ImportError:
-        from . import hdf5lite
+    from . import hdf5lite
 
-        arrays, attrs = hdf5lite.read_hdf5(payload, variables)
-        if group is not None:  # netCDF variable-group selection (ref :115)
-            pre = group.strip("/") + "/"
-            arrays = {
-                k[len(pre):]: v for k, v in arrays.items() if k.startswith(pre)
-            }
-            attrs = {
-                k[len(pre):]: v for k, v in attrs.items() if k.startswith(pre)
-            }
-        else:  # flatten: leaf names, root-level winning on collision
-            arrays = {k.rsplit("/", 1)[-1]: v for k, v in sorted(
-                arrays.items(), key=lambda kv: kv[0].count("/"), reverse=True
-            )}
-            attrs = {k.rsplit("/", 1)[-1]: v for k, v in sorted(
-                attrs.items(), key=lambda kv: kv[0].count("/"), reverse=True
-            )}
-        cols = {}
-        for n, arr in arrays.items():
-            # full mask_and_scale, matching the xarray path (CF packed
-            # data: unpacked = packed * scale_factor + add_offset, fill
-            # masked on the PACKED value first).  Integer variables are
-            # promoted to float64 whenever any of these attrs is present
-            # — the common satellite int16+scale_factor encoding must not
-            # silently decode to raw packed integers on this path.
-            a_at = attrs.get(n, {})
-            fv = a_at.get("_FillValue")
-            sf = a_at.get("scale_factor")
-            ao = a_at.get("add_offset")
-            packed = (fv is not None) or (sf is not None) or (ao is not None)
-            if arr.dtype.kind == "f" or packed:
-                raw = arr
-                arr = arr.astype(np.float64, copy=True)
-                if fv is not None:
-                    fill = float(np.asarray(fv).ravel()[0])
-                    arr = np.where(arr == fill, np.nan, arr)
-                elif raw.dtype.kind == "f":
-                    # floats with no explicit fill: the conventional
-                    # default fill still masks (xarray behavior)
-                    arr = np.where(arr == FILL_VALUE_DEFAULT, np.nan, arr)
-                if sf is not None or ao is not None:
-                    scale = float(np.asarray(sf).ravel()[0]) if sf is not None else 1.0
-                    offset = float(np.asarray(ao).ravel()[0]) if ao is not None else 0.0
-                    arr = arr * scale + offset
-            cols[n] = arr if arr.ndim == 1 else list(arr)
-        return pd.DataFrame(cols)
-    ds = xr.open_dataset(  # pragma: no cover - exercised when lib present
-        io.BytesIO(payload), engine="h5netcdf", mask_and_scale=True, group=group
-    )
-    try:  # pragma: no cover
-        names = [n for n in ds.data_vars if variables is None or n in variables]
-        cols = {}
-        for n in names:
-            arr = ds[n].to_numpy()
-            if arr.ndim == 1:
-                cols[n] = arr
-            elif arr.ndim == 2:
-                cols[n] = list(arr)
-            else:
-                raise ValueError(f"variable {n}: ndim {arr.ndim} unsupported")
-        return pd.DataFrame(cols)
-    finally:  # pragma: no cover
-        ds.close()
+    arrays, attrs = hdf5lite.read_hdf5(payload, variables)
+    if group is not None:  # netCDF variable-group selection (ref :115)
+        pre = group.strip("/") + "/"
+        arrays = {
+            k[len(pre):]: v for k, v in arrays.items() if k.startswith(pre)
+        }
+        attrs = {
+            k[len(pre):]: v for k, v in attrs.items() if k.startswith(pre)
+        }
+    else:  # flatten: leaf names, root-level winning on collision
+        arrays = {k.rsplit("/", 1)[-1]: v for k, v in sorted(
+            arrays.items(), key=lambda kv: kv[0].count("/"), reverse=True
+        )}
+        attrs = {k.rsplit("/", 1)[-1]: v for k, v in sorted(
+            attrs.items(), key=lambda kv: kv[0].count("/"), reverse=True
+        )}
+    cols = {}
+    for n, arr in arrays.items():
+        # full mask_and_scale, as xarray applies it (CF packed
+        # data: unpacked = packed * scale_factor + add_offset, fill
+        # masked on the PACKED value first).  Integer variables are
+        # promoted to float64 whenever any of these attrs is present
+        # — the common satellite int16+scale_factor encoding must not
+        # silently decode to raw packed integers on this path.
+        a_at = attrs.get(n, {})
+        fv = a_at.get("_FillValue")
+        sf = a_at.get("scale_factor")
+        ao = a_at.get("add_offset")
+        packed = (fv is not None) or (sf is not None) or (ao is not None)
+        if arr.dtype.kind == "f" or packed:
+            raw = arr
+            arr = arr.astype(np.float64, copy=True)
+            if fv is not None:
+                fill = float(np.asarray(fv).ravel()[0])
+                arr = np.where(arr == fill, np.nan, arr)
+            elif raw.dtype.kind == "f":
+                # floats with no explicit fill: the conventional
+                # default fill still masks (xarray behavior)
+                arr = np.where(arr == FILL_VALUE_DEFAULT, np.nan, arr)
+            if sf is not None or ao is not None:
+                scale = float(np.asarray(sf).ravel()[0]) if sf is not None else 1.0
+                offset = float(np.asarray(ao).ravel()[0]) if ao is not None else 0.0
+                arr = arr * scale + offset
+        cols[n] = arr if arr.ndim == 1 else list(arr)
+    return pd.DataFrame(cols)
 
 
 DECODERS: dict[str, Callable[[bytes, list[str] | None], pd.DataFrame]] = {

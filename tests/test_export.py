@@ -50,21 +50,6 @@ def test_export_one_row_per_slice(spark):
     assert out.count() == 4
 
 
-def test_geotiff_encoder_produces_real_tiff_without_rasterio():
-    """S8 no longer stubs: without rasterio the pure-numpy writer emits a
-    real little-endian TIFF (round-trip + spec goldens in
-    tests/test_containers.py)."""
-    payload = export.encode_geotiff(np.zeros((2, 2)), bounds=(0, 0, 2, 2))
-    assert payload[:4] == b"II*\x00"
-
-
-def test_netcdf_encoder_produces_real_cdf_without_xarray():
-    """S9 no longer stubs: without xarray the pure-numpy writer emits a
-    real NetCDF classic (CDF-1) file."""
-    payload = export.encode_netcdf(np.zeros((2, 2)), bounds=(0, 0, 2, 2))
-    assert payload[:4] == b"CDF\x01"
-
-
 def test_export_per_target_bounds(spark):
     """Each slice is georeferenced with ITS target's bbox (half-pixel-
     expanded edge bounds), not a hardcoded global extent; targets without a

@@ -60,20 +60,15 @@ def test_linear_fallback_below_min_points():
 
 
 def test_cubic_without_scipy_runs_bezier_fallback():
-    # 'linear' and 'cubic' both execute without scipy; allow_fallback=False
-    # on cubic still raises (exact Clough-Tocher C1 semantics need scipy),
-    # while the default runs the numpy cubic Bézier kernel — which must
-    # reproduce an affine field exactly, like every method
+    # 'cubic' runs the numpy Clough-Tocher kernel (no scipy needed), which
+    # must reproduce an affine field exactly, like every method
     plon = np.array([0.0, 2.0, 0.0, 2.0, 1.0])
     plat = np.array([0.0, 0.0, 2.0, 2.0, 1.0])
     vals = 1.0 + 2.0 * plon - 3.0 * plat
     mlon, mlat = G.make_mesh(0, 0, 2, 2, 3, 3)
-    if not G.HAVE_SCIPY:
-        with pytest.raises(NotImplementedError):
-            G.grid_points(plon, plat, vals, mlon, mlat, "cubic", allow_fallback=False)
-        got = G.grid_points(plon, plat, vals, mlon, mlat, "cubic")
-        glon, glat = np.meshgrid(mlon.astype(np.float64), mlat.astype(np.float64))
-        np.testing.assert_allclose(got, 1.0 + 2.0 * glon - 3.0 * glat, atol=1e-6)
+    got = G.grid_points(plon, plat, vals, mlon, mlat, "cubic")
+    glon, glat = np.meshgrid(mlon.astype(np.float64), mlat.astype(np.float64))
+    np.testing.assert_allclose(got, 1.0 + 2.0 * glon - 3.0 * glat, atol=1e-6)
 
 
 def test_linear_executes_without_scipy():
@@ -84,7 +79,7 @@ def test_linear_executes_without_scipy():
     plat = rng.uniform(0, 4, 40)
     vals = 2.0 + 3.0 * plon - 0.5 * plat
     mlon, mlat = G.make_mesh(1, 1, 3, 3, 5, 5)  # interior mesh: inside hull
-    got = G.grid_points(plon, plat, vals, mlon, mlat, "linear", allow_fallback=False)
+    got = G.grid_points(plon, plat, vals, mlon, mlat, "linear")
     glon, glat = np.meshgrid(mlon.astype(np.float64), mlat.astype(np.float64))
     np.testing.assert_allclose(got, 2.0 + 3.0 * glon - 0.5 * glat, atol=1e-9)
 

@@ -330,19 +330,3 @@ def test_generator_codec_payloads_decode_on_both_legs(spark):
         tot = sum((base + 7 * rr + 3 * cc + 11 * ch) % 256
                   for rr in range(12) for cc in range(16) for ch in range(3))
         assert round(r.mean_intensity * 16 * 12 * 3) == tot
-
-
-def test_decode_image_la_mode_normalized(monkeypatch):
-    """ADVICE r9: a 2-channel 'LA' PIL decode must split luma/alpha, not
-    leak a 2-channel array through the channels contract."""
-    la = np.zeros((4, 5, 2), np.uint8)
-    la[..., 0] = np.arange(20, dtype=np.uint8).reshape(4, 5)  # luma
-    la[..., 1] = 200  # alpha
-    monkeypatch.setattr(M, "_pil_decode", lambda payload: la)
-    out3 = M.decode_image("webp", b"x", 5, 4, 3)
-    assert out3.shape == (4, 5, 3)
-    assert (out3 == la[..., :1]).all()  # luma replicated, no alpha leak
-    out1 = M.decode_image("webp", b"x", 5, 4, 1)
-    assert out1.shape == (4, 5, 1) and (out1[..., 0] == la[..., 0]).all()
-    out4 = M.decode_image("webp", b"x", 5, 4, 4)
-    assert out4.shape == (4, 5, 4) and (out4[..., 3] == 200).all()

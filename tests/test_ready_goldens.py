@@ -1,12 +1,12 @@
-"""Ready-to-activate goldens for the library-gated paths: scipy
-linear/cubic gridding (G1) and h5netcdf NetCDF decode (S1). They skip
-cleanly while scipy / xarray+h5netcdf are absent from the environment and
-pin the exact semantics the moment they appear — no code change needed.
+"""Goldens for the gridding kernel (G1) and the container codecs, plus
+library differentials that skip cleanly while scipy, rasterio or
+xarray+h5netcdf are absent and check our own numpy code against them the
+moment they appear — no code change needed.
 
-The linear/cubic goldens use a planar field v = 2 + 3·lon − lat:
-``scipy.interpolate.griddata`` reproduces a plane exactly for both methods
+The linear/cubic goldens use a planar field v = 2 + 3·lon − lat: a
+piecewise-linear or Clough-Tocher interpolant reproduces a plane exactly
 regardless of the Delaunay triangulation it picks, so the expected values
-are analytic, not snapshots of one scipy version.
+are analytic, not snapshots of one library version.
 """
 
 from __future__ import annotations
@@ -32,10 +32,7 @@ def _planar_cloud():
 
 @pytest.mark.parametrize("method", ["linear", "cubic"])
 def test_gridding_reproduces_plane(method):
-    # 'linear' runs UN-SKIPPED on the numpy Delaunay kernel (round 6);
-    # 'cubic' still needs scipy's Clough-Tocher interpolant
-    if method == "cubic":
-        pytest.importorskip("scipy")
+    # both run on the numpy Delaunay kernels (operators/interp.py)
     lon, lat, v = _planar_cloud()
     mesh_lon, mesh_lat = G.make_mesh(0.0, 0.0, 10.0, 10.0, 9, 7)
     out = G.grid_points(lon, lat, v, mesh_lon, mesh_lat, method=method)
@@ -92,12 +89,14 @@ def test_linear_falls_back_to_nearest_below_min_points():
 
 
 def test_geotiff_encode_golden():
+    """Differential (activates when rasterio appears): GDAL reads our
+    pure-numpy GeoTIFF writer's bytes."""
     rasterio = pytest.importorskip("rasterio")
-    from oco3_data_transformer_spark.sinks.export import encode_geotiff
+    from oco3_data_transformer_spark.sinks.containers import write_geotiff
 
     arr = np.arange(12, dtype=np.float64).reshape(3, 4)
     arr[1, 2] = np.nan
-    payload = encode_geotiff(arr, bounds=(0.0, 0.0, 4.0, 3.0))
+    payload = write_geotiff(arr, bounds=(0.0, 0.0, 4.0, 3.0))
     with rasterio.io.MemoryFile(payload) as mem, mem.open() as ds:
         assert ds.crs.to_string() == "EPSG:4326"
         back = ds.read(1)
@@ -105,21 +104,6 @@ def test_geotiff_encode_golden():
         assert back[0, 0] == 0.0 and np.isnan(back[1, 2])
         # row 0 is the TOP of the bbox (caller pre-flipped latitude)
         assert ds.transform * (0, 0) == (0.0, 3.0)
-
-
-def test_netcdf_encode_golden():
-    xr = pytest.importorskip("xarray")
-    pytest.importorskip("h5netcdf")
-    import io as _io
-
-    from oco3_data_transformer_spark.sinks.export import encode_netcdf
-
-    arr = np.array([[1.0, np.nan], [3.0, 4.0]])
-    payload = encode_netcdf(arr, var_name="xco2")
-    ds = xr.open_dataset(_io.BytesIO(payload), engine="h5netcdf")
-    back = ds["xco2"].to_numpy()
-    assert back.shape == (2, 2)
-    assert back[0, 0] == 1.0 and np.isnan(back[0, 1]) and back[1, 1] == 4.0
 
 
 def test_netcdf_decode_golden(tmp_path):
