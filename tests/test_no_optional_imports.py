@@ -1,9 +1,8 @@
 """Each operator has one code path, whatever libraries are importable: no
-package module may import an optional library and branch on whether it
-loaded. The libraries below were once imported behind try/except as
-"preferred when importable" bodies of the gridding, export, decode and
-image operators; the package's numpy implementations are the only paths,
-and the library differentials live in the tests (skip-gated).
+package module may import an optional library, because a module that does
+branches on whether it loaded. The gridding, export, decode and image
+operators run their numpy implementations only; the differentials against
+these libraries live in the tests, skip-gated.
 """
 
 from __future__ import annotations
