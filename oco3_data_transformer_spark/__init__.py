@@ -8,7 +8,7 @@ the engine scales horizontally:
 
 - ``operators/``  — sessionization (island detection, ref
   processors/OCO3SamProcessor.py:356-432), filters, joins (broadcast target
-  lookup, nearest-centroid association, range+refine spatial join), gridding,
+  lookup, nearest-centroid association, binned interval join), gridding,
   aggregations, dedup, similarity search.
 - ``functions/``  — scalar/text/vector/hashing column expressions, all
   JVM-side ``pyspark.sql.functions`` compositions (no row-at-a-time UDFs).

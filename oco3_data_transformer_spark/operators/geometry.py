@@ -13,12 +13,9 @@ vectorized in numpy:
     ∨ edge-pair crossing) — exact for simple polygons, which sounding
     footprints (quadrilaterals) are.
 
-These run inside the Python kernels, after a bbox prefilter: only the
-(cell, footprint) pairs whose bounding boxes overlap reach the exact test.
-The target-focused mask prefilters in numpy inside the grid kernel
-(operators/grid.grid_regions); global mode prefilters with a DataFrame band
-join and refines the pairs in an Arrow-batched pandas UDF
-(operators/grid.footprint_cell_hits).
+These run inside the grid kernel (operators/grid.grid_regions), after a
+numpy bbox prefilter: only the (cell, footprint) pairs whose bounding boxes
+overlap reach the exact test. Target and global mode share that one path.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Gridding / interpolation operators G1-G9 (SURVEY.md §2.5) — the core
+"""Gridding / interpolation operators G1-G7 (SURVEY.md §2.5) — the core
 transform of the reference pipeline.
 
 The reference interpolates each region's point soundings onto a fixed
@@ -7,8 +7,8 @@ processors/OCO3SamProcessor.py:66-214: mesh 106-109, interp 161-182), with a
 fallback to 'nearest' when a region has < 4 points (ref :153-159).
 
 Spark-first design:
-  - the kernel is a *grouped-map pandas UDF* (``applyInPandas``) — one group
-    per (day, region), Arrow-batched, numpy-vectorized inside. Regions are
+  - the kernel is a grouped map (``repartition`` + ``mapInPandas``) — one
+    group per (day, region), Arrow-batched, numpy-vectorized inside. Regions are
     independent, so the operator scales linearly with executors; there is no
     cross-region communication at all.
   - 'nearest' is implemented exactly in numpy (argmin of squared Euclidean
@@ -19,28 +19,25 @@ Spark-first design:
     Clough-Tocher element (Powell's affine-invariant reduction,
     interp.cubic_griddata). There is one code path per method, whatever
     libraries are importable.
-  - the target-focused footprint mask (G6/J4) runs inside the same kernel:
-    the rows are partitioned on the mask key (qf, region), each mask
-    group's footprint rings are stacked once, and every grid sub-group's
-    cells are tested against them (bbox prefilter + the exact numpy
-    box×polygon predicate, operators/geometry.py) — the reference's
-    per-target interpolate-then-mask loop (ref :66-307), with no spatial
-    join. Global mode needs the (cell, footprint) hit pairs for its
-    first-wins metadata, so it keeps the pair-returning band join
-    (:func:`footprint_cell_hits`).
-  - first-writer-wins rasterization (G7) is a row_number window, with the
-    explicit deterministic region order the reference gets implicitly from
-    its Python loop (ref processors/OCO3SamGlobalProcessor.py:330-339).
+  - the footprint mask (G6/J4) runs inside the same kernel, in both
+    modes: the rows are partitioned on the mask key ((qf, region) for
+    target mode, (qf, day) for global mode), each mask group's footprint
+    rings are stacked once, and every grid sub-group's cells are tested
+    against them (bbox prefilter + the exact numpy box×polygon predicate,
+    operators/geometry.py) — the reference's interpolate-then-mask loop
+    (ref :66-307), with no spatial join.
+  - first-writer-wins rasterization (G7) rides on the same test: each kept
+    cell carries the columns of the first-ranked footprint that hits it,
+    with the explicit deterministic region order the reference gets
+    implicitly from its Python loop
+    (ref processors/OCO3SamGlobalProcessor.py:330-339).
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 MIN_POINTS_FOR_LINEAR = 4  # ref processors/OCO3SamProcessor.py:153-159
@@ -119,6 +116,7 @@ def grid_regions(
     bbox_cols: tuple[str, str, str, str] | None = None,
     mask_keys: list[str] | None = None,
     mask_scale: float = 1.0,
+    winner_cols: list[str] | None = None,
 ) -> DataFrame:
     """G1/G2 as a grouped-map operator: one kernel invocation per region,
     emitting long-format grid rows (region keys..., lat_idx, lon_idx,
@@ -128,15 +126,22 @@ def grid_regions(
     max_lat) from the J1 broadcast join; when None the global mesh bbox is
     used (G2, ref processors/OCO3SamGlobalProcessor.py:67-205).
 
-    ``mask_keys`` (a subset of ``region_keys``; needs ``bbox_cols``): G6/J4
-    footprint mask. Only the cells whose box intersects at least one
-    footprint of the rows sharing their mask key are kept — footprints are
-    the rows' ``vertex_longitude``/``vertex_latitude`` rings scaled about
-    their centroids by ``mask_scale`` (ref processors/OCO3SamProcessor.py:234-307). A cell's
-    box is its mesh step: half-sizes (max − min) / (2·max(res − 1, 1)). The
-    bbox prefilter uses the unscaled footprint extents, the exact test the
-    scaled rings. A region straddling UTC midnight grids as one group per
-    day, each masked by the footprints of both days.
+    ``mask_keys`` (a subset of ``region_keys``): G6/J4 footprint mask. Only
+    the cells whose box intersects at least one footprint of the rows
+    sharing their mask key are kept — footprints are the rows'
+    ``vertex_longitude``/``vertex_latitude`` rings scaled about their
+    centroids by ``mask_scale`` (ref processors/OCO3SamProcessor.py:234-307);
+    rows without a ring have none. A cell's box is its mesh step:
+    half-sizes (max − min) / (2·max(res − 1, 1)). The bbox prefilter uses
+    the unscaled footprint extents, the exact test the scaled rings. A
+    region straddling UTC midnight grids as one group per day, each masked
+    by the footprints of both days.
+
+    ``winner_cols`` (with ``mask_keys``): G7 first-writer-wins. Each kept
+    cell also carries these columns from the first footprint that hits it,
+    the footprints ranked by a stable sort on the same columns — typed, so
+    a numeric region id orders numerically (2 before 10). The ranking never
+    reorders the group's rows, whose order decides the gridder's ties.
 
     Scale: groups are independent; Spark hashes the partition keys (the
     mask key when masking, else the region keys) into
@@ -164,13 +169,18 @@ def grid_regions(
          T.StructField("lon", T.FloatType()),
          *[T.StructField(c, T.DoubleType()) for c in value_cols]]
     )
+    grid_names = out_schema.fieldNames()
+    for c in winner_cols or []:
+        out_schema.add(c, soundings.schema[c].dataType)
+
+    def bbox_of(pdf: pd.DataFrame) -> tuple:
+        if bbox_cols is None:
+            return GLOBAL_BBOX
+        b = pdf.iloc[0]
+        return (b[bbox_cols[0]], b[bbox_cols[1]], b[bbox_cols[2]], b[bbox_cols[3]])
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        if bbox_cols is not None:
-            b = pdf.iloc[0]
-            bbox = (b[bbox_cols[0]], b[bbox_cols[1]], b[bbox_cols[2]], b[bbox_cols[3]])
-        else:
-            bbox = GLOBAL_BBOX
+        bbox = bbox_of(pdf)
         mesh_lon, mesh_lat = make_mesh(bbox[0], bbox[1], bbox[2], bbox[3], lon_res, lat_res)
         plon = pdf[lon_col].to_numpy(dtype=np.float64)
         plat = pdf[lat_col].to_numpy(dtype=np.float64)
@@ -230,7 +240,7 @@ def grid_regions(
                 out[c] = grid_points(
                     plon, plat, vals, mesh_lon, mesh_lat, method
                 ).ravel()
-        return pd.DataFrame(out)[[f.name for f in out_schema.fields]]
+        return pd.DataFrame(out)[grid_names]
 
     # looked up when the plan is built, so a wrapped predicate (the
     # benchmark's counters) is the one the tasks run
@@ -244,16 +254,24 @@ def grid_regions(
             rings = _footprint_rings(
                 m["vertex_longitude"], m["vertex_latitude"], mask_scale, scale_footprint
             )
+            if rings is None:
+                continue  # no footprint: every cell is masked out
+            if winner_cols:
+                rings = _ranked(rings, m[winner_cols])
             for _, g in m.groupby(list(region_keys), sort=False):
                 cells = fit(g)
-                b = g.iloc[0]
-                keep = _cells_hit(
+                bbox = bbox_of(g)
+                first = _cells_hit(
                     cells["lon"].to_numpy(), cells["lat"].to_numpy(),
-                    (b[bbox_cols[2]] - b[bbox_cols[0]]) / div_lon,
-                    (b[bbox_cols[3]] - b[bbox_cols[1]]) / div_lat,
+                    (bbox[2] - bbox[0]) / div_lon, (bbox[3] - bbox[1]) / div_lat,
                     rings, boxes_intersect_polygons,
                 )
-                yield cells[keep]
+                keep = first >= 0
+                cells = cells[keep]
+                if winner_cols:
+                    won = m.iloc[rings[0][first[keep]]]
+                    cells = cells.assign(**{c: won[c].to_numpy() for c in winner_cols})
+                yield cells
 
     def fit_partition(batches):
         frames = [b for b in batches if len(b)]
@@ -273,35 +291,46 @@ def grid_regions(
 
 
 def _footprint_rings(v_lon: pd.Series, v_lat: pd.Series, scale: float, scale_footprint):
-    """One mask group's footprints: the unscaled ring extents (the bbox
-    prefilter's bounds; NaN vertices ignored, as Spark's array_min/max
-    ignore nulls) and the float64 rings scaled by ``scale``. Rows without a
-    ring have no footprint."""
+    """One mask group's footprints: the positions of the rows that have a
+    ring, their unscaled ring extents (the bbox prefilter's bounds; NaN
+    vertices ignored, as Spark's array_min/max ignore nulls) and their
+    float64 rings scaled by ``scale``. Rows without a ring have no
+    footprint."""
     ok = (v_lon.notna() & v_lat.notna()).to_numpy()
     if not ok.any():
         return None
+    pos = np.flatnonzero(ok)
     px = np.stack(v_lon.to_numpy()[ok]).astype(np.float64)
     py = np.stack(v_lat.to_numpy()[ok]).astype(np.float64)
     extents = (np.fmin.reduce(px, axis=1), np.fmax.reduce(px, axis=1),
                np.fmin.reduce(py, axis=1), np.fmax.reduce(py, axis=1))
     if scale != 1.0:
         px, py = scale_footprint(px, py, scale)
-    return extents, px, py
+    return pos, extents, px, py
+
+
+def _ranked(rings, keys: pd.DataFrame):
+    """``rings`` reordered by a stable sort of the ringed rows' ``keys``, so
+    a footprint's index is its first-writer rank."""
+    pos, extents, px, py = rings
+    order = keys.iloc[pos].reset_index(drop=True).sort_values(
+        list(keys.columns), kind="stable").index.to_numpy()
+    return pos[order], tuple(e[order] for e in extents), px[order], py[order]
 
 
 def _cells_hit(lon, lat, half_lon, half_lat, rings, intersects) -> np.ndarray:
-    """Per cell: does its box intersect at least one footprint? A bbox
-    prefilter selects the (cell, footprint) pairs, then ``intersects``
+    """Per cell: the index of the first footprint in ``rings`` whose ring
+    intersects the cell's box, or −1 when none does. A bbox prefilter
+    selects the (cell, footprint) pairs, then ``intersects``
     (geometry.boxes_intersect_polygons) tests each pair exactly. The
     candidate matrix is chunked over cells to bound memory."""
-    keep = np.zeros(len(lon), dtype=bool)
-    if rings is None:
-        return keep
-    (f_x0, f_x1, f_y0, f_y1), px, py = rings
+    _, (f_x0, f_x1, f_y0, f_y1), px, py = rings
+    none = len(f_x0)
+    first = np.full(len(lon), none)
     lo = lon.astype(np.float64)
     la = lat.astype(np.float64)
     x0, x1, y0, y1 = lo - half_lon, lo + half_lon, la - half_lat, la + half_lat
-    step = max(1, 2_000_000 // len(f_x0))
+    step = max(1, 2_000_000 // none)
     for s in range(0, len(lo), step):
         e = s + step
         ci, fi = np.nonzero(
@@ -312,124 +341,6 @@ def _cells_hit(lon, lat, half_lon, half_lat, rings, intersects) -> np.ndarray:
             continue
         ci += s
         hit = intersects(x0[ci], y0[ci], x1[ci], y1[ci], px[fi], py[fi])
-        keep[ci[hit]] = True
-    return keep
-
-
-_REFINE_SCHEMA = T.BooleanType()
-
-
-def footprint_cell_hits(
-    cells: DataFrame,
-    footprints: DataFrame,
-    region_keys: list[str],
-    cell_half_lon: float,
-    cell_half_lat: float,
-    scale_factor: float = 1.0,
-    carry_cols: list[str] | None = None,
-) -> DataFrame:
-    """J4 both phases, returning surviving (cell, footprint) PAIRS.
-
-    Phase 1 (coarse, pure DataFrame): equi-join on region keys + bbox
-    interval overlap — the reference's ``argwhere`` band prefilter
-    (ref processors/OCO3SamProcessor.py:253-267) as a range-join condition.
-    Phase 2 (exact): Arrow-batched pandas UDF over the surviving pairs using
-    the numpy box×polygon predicate (ref :279-295 ``intersects``).
-
-    ``footprints`` columns: region keys + ``v_lon`` / ``v_lat``
-    (array<float>, unclosed ring) + any ``carry_cols`` (e.g. region index +
-    target metadata for G7). ``cells``: region keys + lat/lon centers +
-    lat_idx/lon_idx.
-    """
-    from ..operators.geometry import boxes_intersect_polygons, scale_footprint
-
-    fp = footprints.select(
-        *[F.col(k).alias(f"__f_{k}") for k in region_keys],
-        F.col("v_lon"),
-        F.col("v_lat"),
-        F.array_min("v_lon").alias("fp_min_lon"),
-        F.array_max("v_lon").alias("fp_max_lon"),
-        F.array_min("v_lat").alias("fp_min_lat"),
-        F.array_max("v_lat").alias("fp_max_lat"),
-        *(carry_cols or []),
-    )
-    cond = F.lit(True)
-    for k in region_keys:
-        cond = cond & (F.col(k) == F.col(f"__f_{k}"))
-    cond = (
-        cond
-        & (F.col("lon") - cell_half_lon <= F.col("fp_max_lon"))
-        & (F.col("lon") + cell_half_lon >= F.col("fp_min_lon"))
-        & (F.col("lat") - cell_half_lat <= F.col("fp_max_lat"))
-        & (F.col("lat") + cell_half_lat >= F.col("fp_min_lat"))
-    )
-    paired = cells.join(fp, cond, "inner")
-
-    @F.pandas_udf(_REFINE_SCHEMA)
-    def refine(
-        lon: pd.Series, lat: pd.Series, v_lon: pd.Series, v_lat: pd.Series
-    ) -> pd.Series:
-        if len(lon) == 0:
-            return pd.Series([], dtype=bool)
-        px = np.stack(v_lon.to_numpy()).astype(np.float64)
-        py = np.stack(v_lat.to_numpy()).astype(np.float64)
-        if scale_factor != 1.0:
-            px, py = scale_footprint(px, py, scale_factor)
-        res = boxes_intersect_polygons(
-            lon.to_numpy(dtype=np.float64) - cell_half_lon,
-            lat.to_numpy(dtype=np.float64) - cell_half_lat,
-            lon.to_numpy(dtype=np.float64) + cell_half_lon,
-            lat.to_numpy(dtype=np.float64) + cell_half_lat,
-            px,
-            py,
-        )
-        return pd.Series(res)
-
-    return paired.filter(
-        refine(F.col("lon"), F.col("lat"), F.col("v_lon"), F.col("v_lat"))
-    ).drop(*[f"__f_{k}" for k in region_keys], "fp_min_lon", "fp_max_lon",
-           "fp_min_lat", "fp_max_lat", "v_lon", "v_lat")
-
-
-def first_wins_rasterize(
-    masked_cells: DataFrame,
-    pixel_keys: list[str],
-    order_cols,
-    meta_cols: list,
-) -> DataFrame:
-    """G7: per global pixel keep the metadata of the first-writing region —
-    deterministic via explicit ordering over the *typed* region-identity
-    columns (the reference gets the order implicitly from loop order, ref
-    processors/OCO3SamGlobalProcessor.py:270-412; a numeric region_id must
-    order numerically, not lexicographically).
-
-    Implemented as ``min(struct(order..., meta...))`` rather than a rank-1
-    window: the aggregate combines map-side, so the shuffle moves one row
-    per pixel instead of one row per (pixel, footprint-hit) — the hit table
-    is the largest intermediate of global mode. Order fields are compared
-    first and are unique per region, so meta fields never decide."""
-    if isinstance(order_cols, str):
-        order_cols = [order_cols]
-    order_exprs = [
-        (F.col(c) if isinstance(c, str) else c).alias(f"__o{i}")
-        for i, c in enumerate(order_cols)
-    ]
-    meta_names = masked_cells.select(*meta_cols).columns
-    packed = F.min(F.struct(*order_exprs, *meta_cols)).alias("__w")
-    out = masked_cells.groupBy(*pixel_keys).agg(packed)
-    return out.select(
-        *pixel_keys, *[F.col(f"__w.{n}").alias(n) for n in meta_names]
-    )
-
-
-def densify_empty_day(
-    spark_df_template: DataFrame,
-    day_value,
-    fill: float | None = None,
-) -> DataFrame:
-    """G9: synthesize a full fill-value grid for a mission-day with no data
-    (ref processors/Processor.py:51-76, OCO3SamGlobalProcessor.py:639-718).
-    ``spark_df_template`` supplies the (lat_idx, lon_idx, lat, lon) cells;
-    value columns become the fill literal."""
-    out = spark_df_template.withColumn("time", F.lit(day_value).cast("timestamp"))
-    return out.withColumn("value", F.lit(fill).cast("double"))
+        np.minimum.at(first, ci[hit], fi[hit])
+    first[first == none] = -1
+    return first

@@ -2,8 +2,8 @@
 
 Physical-strategy stance for 100 TB:
   - dimension lookups broadcast (J1, J2's target side, J3's sequence side);
-  - the spatial mask join (J4) is coarse bbox range-join + exact refine so
-    Spark's range-join / AQE machinery prunes before geometry math;
+  - the footprint mask (J4) is not a join: it runs inside the grid kernel
+    (operators/grid.grid_regions), bbox prefilter then exact geometry;
   - day-alignment (J5) and diff (J7) are full-outer equi-joins on low-card
     keys — map-side with AQE coalescing.
 """
@@ -242,31 +242,6 @@ def sequence_index_join(
     return out.withColumn("target_id", F.coalesce(F.col("__seq_id"), F.lit(none_value))).drop(
         "__seq_id"
     )
-
-
-def bbox_prefilter_join(
-    cells: DataFrame,
-    footprints: DataFrame,
-    join_keys: list[str],
-) -> DataFrame:
-    """J4 coarse phase: join grid cells to footprint polygons on bbox
-    interval overlap — the Spark analog of the reference's ``argwhere``
-    lat/lon band prefilter (ref processors/OCO3SamProcessor.py:253-267).
-
-    ``cells`` must carry cell bounds (cell_min_lon .. cell_max_lat);
-    ``footprints`` the polygon bbox (fp_min_lon .. fp_max_lat). Equi keys
-    (granule/region) keep the join partitioned; the interval predicate is
-    evaluated as a range condition Catalyst can optimize.
-    """
-    cond = (
-        (F.col("cell_min_lon") <= F.col("fp_max_lon"))
-        & (F.col("cell_max_lon") >= F.col("fp_min_lon"))
-        & (F.col("cell_min_lat") <= F.col("fp_max_lat"))
-        & (F.col("cell_max_lat") >= F.col("fp_min_lat"))
-    )
-    for k in join_keys:
-        cond = cond & (cells[k] == footprints[k])
-    return cells.join(footprints, cond, "inner")
 
 
 def day_alignment(

@@ -55,10 +55,19 @@ def _canon_cell(v):
     return str(v)
 
 
-def canonical_rows(df: pd.DataFrame) -> list[tuple]:
+# Unit separator between a row's canonical cells: one str per row is a
+# fraction of a tuple of per-cell strs (~500 bytes per row), and both
+# engines' row lists are held at once for the comparison.
+_SEP = "\x1f"
+
+
+def canonical_rows(df: pd.DataFrame) -> list[str]:
+    """The frame's rows, each one string of its canonical cells in sorted
+    column order, sorted."""
     cols = sorted(df.columns)
-    out = [tuple(_canon_cell(v) for v in row) for row in df[cols].itertuples(index=False)]
-    return sorted(out)
+    out = [_SEP.join([_canon_cell(v) for v in row]) for row in df[cols].itertuples(index=False)]
+    out.sort()
+    return out
 
 
 # Non-vacuous parity floor (VERDICT r06 item 6): every registry query is
@@ -125,7 +134,8 @@ def compare_query(
     rd = canonical_rows(ddf)
     del ddf
     if rs != rd:
-        diffs = [(a, b) for a, b in zip(rs, rd) if a != b][:3]
+        diffs = [(tuple(a.split(_SEP)), tuple(b.split(_SEP)))
+                 for a, b in zip(rs, rd) if a != b][:3]
         res["match"] = False
         res["why"] = f"values differ, first diffs: {diffs}"
         return res

@@ -9,13 +9,12 @@ Differences from the reference that are architecture, not semantics:
     MERGE-style append (sinks/store.py);
   - pre/post-QF dual output is two branches of one cached frame, not two
     passes over the files;
-  - the target-focused footprint mask runs inside the grid kernel: one
-    ``MapInPandas`` grids each region and masks its cells to the region's
+  - the footprint mask runs inside the grid kernel: one ``MapInPandas``
+    grids each region (global mode: each day) and masks its cells to the
     footprints (operators/grid.grid_regions), where the reference loops
-    over targets doing the same. Global mode still pairs cells with
-    footprints (one mask-refine ``ArrowEvalPython``), because its
-    first-wins metadata needs the pairs. ``store.append`` materializes its
-    input once, so a day's kernels run once per append.
+    over targets doing the same; in global mode the same kernel stamps each
+    kept pixel with its first-writing region. ``store.append``
+    materializes its input once, so a day's kernels run once per append.
 
 The decoded soundings and the region rows are cached, so the granules are
 decoded once however many passes read them. The cache lives until the
@@ -231,20 +230,12 @@ def process_oco2_granules(
     OCO-2 carries xco2_x2019 as an extra science variable."""
     value_cols = value_cols or ["xco2", "xco2_uncertainty", "xco2_x2019"]
     soundings = _persist(soundings)
-    assoc = associate_oco2_regions(soundings, targets).select(
-        "granule", "region_id", F.col("target_id").alias("__assoc_target")
-    )
-    regions = sess_ops.detect_regions(
-        soundings.withColumn("__const", F.lit("run")),
-        ["granule"], "sounding_idx", "operation_mode",
-        OPERATION_MODE_TARGET, "__const", margin=2,
-    ).withColumn("mode", F.lit(int(OPERATION_MODE_TARGET)))
-    regions = regions.join(assoc, ["granule", "region_id"], "inner").withColumn(
-        "target_id", F.col("__assoc_target")
-    )
-    rows = sess_ops.assign_rows_to_regions(
-        soundings, regions, ["granule"], "sounding_idx",
-        carry_cols=["mode", "target_id"],
+    rows = _oco2_region_rows(soundings)
+    assoc = _nearest_target(rows, targets).select("granule", "region_id", "target_id")
+    # broadcast: the streamed rows keep their order, which decides the
+    # gridder's nearest-neighbour ties
+    rows = rows.join(F.broadcast(assoc), ["granule", "region_id"], "inner").withColumn(
+        "mode", F.lit(int(OPERATION_MODE_TARGET))
     )
     return _target_focused_tail(
         rows, targets.drop("centroid_lon", "centroid_lat"),
@@ -271,12 +262,11 @@ def process_oco3_global(
     any footprint-claimed pixel (the reference uses −1 codes at encode time,
     ref :721-728; the sink applies encoding).
 
-    Scale: the grid kernel groups by (qf, day) — one task per day per QF
-    branch; the mask/raster join is partitioned on the same keys, and the
-    global mesh never exists densely outside each task.
+    Scale: the grid kernel groups by (qf, day) — one group per day per QF
+    branch, gridded, masked and rasterized in one task, so the global mesh
+    never exists densely outside it.
     """
     from ..functions.scalar import determine_id_type
-    from ..operators import grid as grid_ops
 
     value_cols = value_cols or ["xco2", "xco2_uncertainty"]
 
@@ -291,49 +281,24 @@ def process_oco3_global(
     pre = rows.withColumn("qf", F.lit("pre"))
     post = rows.filter(good).withColumn("qf", F.lit("post"))
     both = pre.unionByName(post).withColumn("time", F.date_trunc("DAY", F.col("time")))
+    both = both.withColumn("target_type", determine_id_type(F.col("target_id")))
 
-    # G2: one grid fit per (qf, day) over the shared global mesh
+    # G2 + G6/G7: one grid fit per (qf, day) over the shared global mesh,
+    # masked in the same kernel to the footprints of the (qf, day); each
+    # kept pixel carries the metadata of its first-writing region, ordered
+    # on the typed (granule, mode, region_id) — region 2 before 10, the
+    # reference's loop order
     gridded = grid_ops.grid_regions(
         both, ["qf", "time"], value_cols,
         lon_col="longitude", lat_col="latitude",
-        lon_res=lon_res, lat_res=lat_res, method=method, bbox_cols=None,
+        lon_res=lon_res, lat_res=lat_res, method=method,
+        mask_keys=["qf", "time"], mask_scale=mask_scale,
+        winner_cols=["granule", "mode", "region_id", "target_id", "target_type"],
     )
-
-    half_lon = (grid_ops.GLOBAL_BBOX[2] - grid_ops.GLOBAL_BBOX[0]) / (2 * max(lon_res - 1, 1))
-    half_lat = (grid_ops.GLOBAL_BBOX[3] - grid_ops.GLOBAL_BBOX[1]) / (2 * max(lat_res - 1, 1))
-
-    footprints = both.select(
-        F.col("qf"), F.col("time"),
-        F.col("vertex_longitude").alias("v_lon"),
-        F.col("vertex_latitude").alias("v_lat"),
-        F.col("granule").alias("f_granule"),
-        F.col("mode").alias("f_mode"),
-        F.col("region_id").alias("f_region_id"),
-        F.col("target_id").alias("f_target_id"),
+    return gridded.select(
+        "qf", "time", "lat_idx", "lon_idx", "lat", "lon", *value_cols,
+        "target_id", "target_type", F.col("mode").alias("operation_mode"),
     )
-    hits = grid_ops.footprint_cell_hits(
-        gridded, footprints, ["qf", "time"], half_lon, half_lat, mask_scale,
-        carry_cols=["f_granule", "f_mode", "f_region_id", "f_target_id"],
-    )
-    # G6 + G7: mask = pixels with >= 1 hit, each carrying the metadata of
-    # its first-writing region. Typed order columns — a numeric region_id
-    # orders numerically (region 2 before 10), matching the reference's
-    # loop order; a string concat would sort '10' < '2'. The pixel's grid
-    # values ride in the same aggregate (every hit of a pixel carries the
-    # same ones), so the grid is not joined back and executes once.
-    pixel = ["qf", "time", "lat_idx", "lon_idx"]
-    out = grid_ops.first_wins_rasterize(
-        hits,
-        pixel,
-        ["f_granule", "f_mode", "f_region_id"],
-        [
-            F.col("f_target_id").alias("target_id"),
-            determine_id_type(F.col("f_target_id")).alias("target_type"),
-            F.col("f_mode").alias("operation_mode"),
-            *[c for c in gridded.columns if c not in pixel],
-        ],
-    )
-    return out.select(*gridded.columns, "target_id", "target_type", "operation_mode")
 
 
 def densify_missing_day(
@@ -360,14 +325,24 @@ def associate_oco2_regions(
     associate each region with the nearest target centroid, keeping it only
     if the region bbox intersects the target bbox
     (ref processors/OCO2Processor.py:353-435)."""
-    # OCO-2 carries no target id, so runs split only on mode gaps: a
-    # constant run key makes every contiguous Target-mode stretch one region.
+    return _nearest_target(_oco2_region_rows(soundings), targets)
+
+
+def _oco2_region_rows(soundings: DataFrame) -> DataFrame:
+    """The OCO-2 soundings with their Target-mode region. OCO-2 carries no
+    target id, so runs split only on mode gaps: a constant run key makes
+    every contiguous Target-mode stretch one region."""
     regions = sess_ops.detect_regions(
         soundings.withColumn("__const", F.lit("run")),
         ["granule"], "sounding_idx", "operation_mode",
         OPERATION_MODE_TARGET, "__const", margin=2,
     ).drop("__const", "n_runs")
-    rows = sess_ops.assign_rows_to_regions(soundings, regions, ["granule"], "sounding_idx")
+    return sess_ops.assign_rows_to_regions(soundings, regions, ["granule"], "sounding_idx")
+
+
+def _nearest_target(rows: DataFrame, targets: DataFrame) -> DataFrame:
+    """J2 on assigned region rows: per (granule, region_id) the nearest
+    target centroid, kept if the region extent meets the target bbox."""
     stats = region_centroid_extent(rows, ["granule", "region_id"], "latitude", "longitude")
     t = targets.select(
         F.col("target_id"), F.col("centroid_lat").alias("t_lat"),

@@ -19,7 +19,8 @@ Spark mapping implemented here:
     control table, the watermark analog with a completeness predicate
     instead of wall-clock).
   - late-data repair: a batch touching an already-processed day routes that
-    day through ``store.upsert`` (partition-scoped MERGE) instead of append.
+    day through ``store.merge`` (partition-scoped MERGE that keeps the
+    day's other slices) instead of append.
   - ledger: a control Parquet table of (day, mission, granule, batch_id)
     written after the sink write in the same foreachBatch (the reference
     writes its JSON ledger post-success, ref run.py:828-854).
@@ -180,7 +181,7 @@ def make_batch_processor(
     transform: Callable[[DataFrame], DataFrame],
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function: validate → hold-back → transform
-    (the mission pipeline) → append or repair-upsert → ledger update.
+    (the mission pipeline) → append or repair-merge → ledger update.
 
     ``transform`` maps raw sounding rows of the batch to STORE_SLICE rows
     (e.g. plans.pipeline.process_oco3_granules + export.melt_values).

@@ -128,17 +128,36 @@ def test_grid_regions_spark_operator(spark):
     assert r1.lon.min() == pytest.approx(0.0) and r1.lon.max() == pytest.approx(1.0)
 
 
-def test_first_wins_rasterize(spark):
+def test_grid_regions_first_writer_wins(spark):
+    """``winner_cols`` stamps each kept cell with the first-ranked footprint
+    that hits it. Regions 10 and 2 share a cell: 2 wins (numeric order; the
+    string order would pick '10'). The ringless region-1 row sits on the
+    same cell but is never a footprint. Cells no footprint hits are
+    dropped. The mesh is the global one (no ``bbox_cols``): 10° cells."""
+
+    def row(rid, target, lon, lat, xco2, ring=True):
+        sq = ([lon - 2, lon + 2, lon + 2, lon - 2], [lat - 2, lat - 2, lat + 2, lat + 2])
+        return ("d", "g1", 4, rid, target, lon, lat, xco2, *(sq if ring else (None, None)))
+
     df = spark.createDataFrame(
-        [
-            {"px": 1, "py": 1, "region_idx": 2, "target_id": "late"},
-            {"px": 1, "py": 1, "region_idx": 1, "target_id": "early"},
-            {"px": 2, "py": 1, "region_idx": 5, "target_id": "only"},
-        ]
+        [row(10, "ten", 20.0, 10.0, 1.0), row(2, "two", 20.0, 10.0, 2.0),
+         row(1, "ringless", 20.0, 10.0, 3.0, ring=False), row(5, "five", -60.0, 30.0, 4.0)],
+        "day string, granule string, mode int, region_id long, target_id string, "
+        "longitude double, latitude double, xco2 double, "
+        "vertex_longitude array<float>, vertex_latitude array<float>",
     )
-    out = G.first_wins_rasterize(df, ["px", "py"], "region_idx", ["target_id"])
-    got = {(r.px, r.py): r.target_id for r in out.collect()}
-    assert got == {(1, 1): "early", (2, 1): "only"}
+    out = G.grid_regions(
+        df, ["day"], ["xco2"], lon_res=37, lat_res=19, mask_keys=["day"],
+        winner_cols=["granule", "mode", "region_id", "target_id"],
+    )
+    assert out.columns[-4:] == ["granule", "mode", "region_id", "target_id"]
+    got = {(r.lat_idx, r.lon_idx): (r.lon, r.lat, r.region_id, r.target_id, r.mode)
+           for r in out.collect()}
+    assert got == {
+        (10, 20): (20.0, 10.0, 2, "two", 4),
+        (12, 12): (-60.0, 30.0, 5, "five", 4),
+    }
+    assert out.filter(F.col("region_id") == 5).first().xco2 == 4.0
 
 
 def test_grid_regions_multivar_shared_triangulation_matches_per_column(spark):

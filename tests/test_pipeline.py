@@ -265,9 +265,9 @@ def _diamond(cx, cy, r=0.3):
 )
 def test_mask_matches_semi_join_form(spark, case, scale):
     """grid_regions with ``mask_keys`` masks each grid group inside the
-    kernel; it must give exactly the rows of the semi-join form (the
-    unmasked grid, footprint_cell_hits' refined pairs, then the grid
-    semi-joined against their cell keys), with no duplicates.
+    kernel; it must give exactly the rows of the unmasked grid whose cell
+    box meets at least one scaled footprint ring of its mask group, tested
+    here pair by pair with no prefilter, with no duplicates.
 
     midnight: one region whose soundings straddle UTC midnight grids as two
     groups with the same (qf, granule, mode, region_id), each masked by the
@@ -275,6 +275,9 @@ def test_mask_matches_semi_join_form(spark, case, scale):
     diamond's box overlaps cell (0, 0), but only its 1.3x scaled ring
     reaches it: the prefilter takes the unscaled extents, the exact test
     the scaled ring."""
+    import numpy as np
+
+    from oco3_data_transformer_spark.operators import geometry
     from oco3_data_transformer_spark.operators import grid as G
 
     region = ["qf", "granule", "mode", "region_id"]
@@ -300,15 +303,22 @@ def test_mask_matches_semi_join_form(spark, case, scale):
     kw = dict(lon_res=4, lat_res=4, bbox_cols=("min_lon", "min_lat", "max_lon", "max_lat"))
     new = G.grid_regions(soundings, group, ["xco2"], mask_keys=region, mask_scale=scale, **kw)
     gridded = G.grid_regions(soundings, group, ["xco2"], **kw)
-    footprints = soundings.select(
-        *region, F.col("vertex_longitude").alias("v_lon"), F.col("vertex_latitude").alias("v_lat")
-    )
-    hits = G.footprint_cell_hits(gridded, footprints, region, 0.5, 0.5, scale)
-    key = [*region, "lat_idx", "lon_idx"]
-    old = gridded.join(hits.select(*key).distinct(), key, "left_semi")
+    rings: dict[tuple, tuple] = {}
+    for r in soundings.collect():
+        px, py = rings.get(tuple(r[k] for k in region), ([], []))
+        rings[tuple(r[k] for k in region)] = (px + [r.vertex_longitude], py + [r.vertex_latitude])
+    want = []
+    for r in gridded.collect():  # every cell box against every ring, half 0.5
+        px, py = (np.array(v, dtype=np.float64) for v in rings[tuple(r[k] for k in region)])
+        if scale != 1.0:
+            px, py = geometry.scale_footprint(px, py, scale)
+        n = len(px)
+        box = [np.full(n, float(c)) for c in (r.lon - 0.5, r.lat - 0.5, r.lon + 0.5, r.lat + 0.5)]
+        if geometry.boxes_intersect_polygons(*box, px, py).any():
+            want.append(tuple(r))
 
     got = sorted(tuple(r) for r in new.collect())
-    want = sorted(tuple(r) for r in old.select(*gridded.columns).collect())
+    want = sorted(want)
     assert got == want
     assert len(got) == len(set(got)) == new.dropDuplicates([*group, "lat_idx", "lon_idx"]).count()
     cells = {(r[3], r[5], r[10], r[11]) for r in got}

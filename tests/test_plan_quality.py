@@ -1004,11 +1004,10 @@ def test_mission_slices_run_each_python_kernel_once(spark, oco3_day, global_mode
     segmentation passes and the row assignment read the cached soundings;
     counted where the decoder runs, since every cache scan re-prints the
     cached plan's decode node), and its executed plan holds ONE grid
-    kernel (``MapInPandas fit_partition(``). Target mode masks inside that
-    kernel, so it has no ArrowEvalPython at all; global mode keeps ONE
-    mask refine, whose hit pairs carry the first-wins metadata. Drop-empty
-    is a window, not a join of the slices against an aggregate of
-    themselves."""
+    kernel (``MapInPandas fit_partition(``). Both modes mask inside that
+    kernel (global mode also picks its first-wins metadata there), so
+    neither has an ArrowEvalPython. Drop-empty is a window, not a join of
+    the slices against an aggregate of themselves."""
     from oco3_data_transformer_spark.sources import granules
 
     decodes = spark.sparkContext.accumulator(0)
@@ -1028,9 +1027,7 @@ def test_mission_slices_run_each_python_kernel_once(spark, oco3_day, global_mode
     # the final plan only: the cached rows' plan prints its own Initial Plan
     plan = str(slices._jdf.queryExecution().executedPlan().finalPhysicalPlan())
     assert plan.count("MapInPandas fit_partition(") == 1, plan
-    assert plan.count("ArrowEvalPython") == int(global_mode), plan
-    if global_mode:
-        assert plan.count("ArrowEvalPython [refine(") == 1, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
     spark.catalog.clearCache()
 
 
