@@ -303,13 +303,13 @@ def test_mask_matches_semi_join_form(spark, case, scale):
     kw = dict(lon_res=4, lat_res=4, bbox_cols=("min_lon", "min_lat", "max_lon", "max_lat"))
     new = G.grid_regions(soundings, group, ["xco2"], mask_keys=region, mask_scale=scale, **kw)
     gridded = G.grid_regions(soundings, group, ["xco2"], **kw)
-    rings: dict[tuple, tuple] = {}
+    rings: dict[tuple, list] = {}
     for r in soundings.collect():
-        px, py = rings.get(tuple(r[k] for k in region), ([], []))
-        rings[tuple(r[k] for k in region)] = (px + [r.vertex_longitude], py + [r.vertex_latitude])
+        rings.setdefault(tuple(r[k] for k in region), []).append(
+            (r.vertex_longitude, r.vertex_latitude))
     want = []
     for r in gridded.collect():  # every cell box against every ring, half 0.5
-        px, py = (np.array(v, dtype=np.float64) for v in rings[tuple(r[k] for k in region)])
+        px, py = (np.array(v, dtype=np.float64) for v in zip(*rings[tuple(r[k] for k in region)]))
         if scale != 1.0:
             px, py = geometry.scale_footprint(px, py, scale)
         n = len(px)
