@@ -7,7 +7,6 @@ Citations into /root/reference:
   C3  SIF 1990-epoch time    processors/OCO3SifProcessor.py:66,93-95
   C4  extract_id             targets/TargetInfo.py:128-146
   C5  determine_id_type      targets/TargetInfo.py:149-154
-  C6  bbox → WKT             main.py:558-563
   C9  ISO-8601 formatting    writers/ZarrWriter.py:48,131
   C10 latitude flip          writers/CoGWriter.py:153-161 (sink-side orderBy)
   C11 md5                    tools/zarrChecksum/checksum.py:51-74
@@ -37,10 +36,6 @@ def granule_date(filename: Column) -> Column:
     yy = F.substring(d, 1, 2).cast("int")
     year = F.when(yy < 69, yy + 2000).otherwise(yy + 1900)
     return F.make_date(year, F.substring(d, 3, 2).cast("int"), F.substring(d, 5, 2).cast("int"))
-
-
-def granule_date_sql(expr: str) -> str:
-    return f"CAST(strptime(string_split({expr}, '_')[3], '%y%m%d') AS DATE)"
 
 
 def timestamp_from_components(date_vec: Column) -> Column:
@@ -102,38 +97,9 @@ def determine_id_type_sql(expr: str) -> str:
     return f"CAST({sql} AS TINYINT)"
 
 
-def bbox_wkt(min_lon: Column, min_lat: Column, max_lon: Column, max_lat: Column) -> Column:
-    """C6: bbox → ``POLYGON ((...))`` WKT string, vertex order of shapely
-    ``box()`` (ref main.py:558-563): (maxx miny, maxx maxy, minx maxy,
-    minx miny, close)."""
-    return F.format_string(
-        "POLYGON ((%s %s, %s %s, %s %s, %s %s, %s %s))",
-        max_lon, min_lat, max_lon, max_lat, min_lon, max_lat, min_lon, min_lat, max_lon, min_lat,
-    )
-
-
-def centroid_bbox_degrees(
-    lon: Column, lat: Column, half_deg: float
-) -> Column:
-    """C7 (degree-offset variant): centroid → square bbox struct by plain
-    degree offsets (ref tools/bbox-tools/targetsToJson.py:35-49 implements
-    both a WGS84 geodesic forward-azimuth version, through pyproj, and
-    this degree-offset fallback; tool-side only in the reference)."""
-    return F.struct(
-        (lon - half_deg).alias("min_lon"),
-        (lat - half_deg).alias("min_lat"),
-        (lon + half_deg).alias("max_lon"),
-        (lat + half_deg).alias("max_lat"),
-    )
-
-
 def iso8601(ts: Column) -> Column:
     """C9: ISO-8601 UTC second-resolution formatting."""
     return F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")
-
-
-def iso8601_sql(expr: str) -> str:
-    return f"strftime({expr}, '%Y-%m-%dT%H:%M:%SZ')"
 
 
 def morton_key(lat_idx: Column, lon_idx: Column, bits: int = 8) -> Column:

@@ -99,22 +99,6 @@ def word_ngrams_sql(expr: str, n: int) -> str:
     )
 
 
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Per-language marker-hit counts over the token array."""
-    toks = tokens(col)
-
-    def contains(words: list[str]):
-        # single-parameter lambda: pyspark HOFs derive arity from the
-        # signature, so extra default args would be bound to the index column
-        arr = F.array(*[F.lit(w) for w in words])
-        return lambda t: F.array_contains(arr, t)
-
-    return {
-        lang: F.size(F.filter(toks, contains(words)))
-        for lang, words in LANG_MARKERS.items()
-    }
-
-
 def lang_id(col: Column) -> Column:
     """argmax language by marker count; ties broken by language code order;
     'und' (undetermined) when no marker hits at all.
@@ -214,13 +198,6 @@ def quality_struct(col: Column) -> Column:
         )
 
     return F.element_at(F.transform(F.array(pre), build), 1)
-
-
-def quality_features(col: Column) -> dict[str, Column]:
-    """Dict view of :func:`quality_struct` (each entry is an independent
-    expression — prefer quality_struct + explode when selecting several)."""
-    qs = quality_struct(col)
-    return {k: qs[k] for k in ("n_char", "n_tok", "mean_tok_len", "stopword_ratio", "punct_ratio")}
 
 
 def quality_features_sql(expr: str) -> dict[str, str]:

@@ -7,7 +7,7 @@ tool; the primitives live here for reuse and oracle checking.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -114,12 +114,6 @@ def month_of_year_consolidation(
     return out.withColumn(
         "span", F.make_date(F.lit(1970), F.col("month"), F.lit(1))
     )
-
-
-def region_any_good(df: DataFrame, region_cols: list[str], good: Column) -> DataFrame:
-    """A3: per-region 'has any good sounding' gate
-    (ref processors/OCO3SamProcessor.py:455-460)."""
-    return df.groupBy(*region_cols).agg(F.max(good.cast("int")).alias("any_good"))
 
 
 def region_centroid_extent(

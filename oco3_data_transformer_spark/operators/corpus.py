@@ -552,76 +552,3 @@ def bpe_apply(
     return stream.join(F.broadcast(words), "w").select(
         id_col, "pos", "w", F.col("symbols").alias("pieces")
     )
-
-
-def dsir_logratio_weights(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    target_col: Column,
-    buckets: int = 256,
-    alpha: float = 1.0,
-) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023, "Data Selection for
-    Language Models via Importance Resampling"): score every document by
-    how target-like its hashed unigram profile is. ``target_col`` is a
-    boolean column marking the in-target exemplars (e.g. ``lang = 'en'``,
-    or a high-quality seed set); the weight is
-
-        logw(doc) = Σ_tokens log( p_target[b(tok)] / p_raw[b(tok)] )
-
-    over ``buckets`` hashed feature buckets with add-``alpha`` smoothing —
-    the bag-of-hashed-ngrams importance estimator the paper resamples by.
-    Returns ``(id, n_tok, logw)``; downstream selection is a
-    deterministic top-k or Gumbel-style resample on ``logw``.
-
-    Scale shape: the doc table is exchanged ONCE on ``id`` (skew-free,
-    spreads tokenization); per-(id,bucket) counts collapse on that same
-    partitioning (group keys ⊇ id — no second exchange); the bucket
-    distribution aggregate moves at most ``buckets``×partitions partial
-    rows (map-side combine); the log-ratio table is ``buckets`` rows —
-    broadcast back (zero shuffle); and the final per-doc sum reuses the
-    original id partitioning. ONE data-proportional exchange total.
-
-    The token→bucket map is the portable md5 hash mod ``buckets``, so the
-    ANSI-SQL oracle computes the identical distribution. alpha/totals
-    arithmetic is formed from exact int64 counts and a handful of
-    literals; both engines evaluate the same expression tree.
-    """
-    from ..functions import text as textf
-
-    sess_par = df.sparkSession.sparkContext.defaultParallelism
-    base = df.repartition(sess_par, F.col(id_col)).select(
-        F.col(id_col).alias("id"),
-        target_col.cast("boolean").alias("__tgt"),
-        F.explode(textf.tokens(F.col(text_col))).alias("tok"),
-    )
-    pb = base.groupBy(
-        "id", "__tgt", F.pmod(hashing.portable_hash64(F.col("tok")), F.lit(buckets)).alias("b")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    dist = pb.groupBy("b").agg(
-        F.sum("c").alias("c_raw"),
-        F.sum(F.when(F.col("__tgt"), F.col("c")).otherwise(F.lit(0))).alias("c_tgt"),
-    )
-    w_all = Window.partitionBy()  # 'buckets'-row relation: global totals are fine
-    rates = dist.select(
-        "b",
-        (
-            F.log(
-                (F.col("c_tgt") + F.lit(alpha))
-                / (F.sum("c_tgt").over(w_all) + F.lit(alpha * buckets))
-            )
-            - F.log(
-                (F.col("c_raw") + F.lit(alpha))
-                / (F.sum("c_raw").over(w_all) + F.lit(alpha * buckets))
-            )
-        ).alias("lr"),
-    )
-    return (
-        pb.join(F.broadcast(rates), "b")
-        .groupBy("id")
-        .agg(
-            F.sum("c").alias("n_tok"),
-            F.round(F.sum(F.col("c") * F.col("lr")), 4).alias("logw"),
-        )
-    )

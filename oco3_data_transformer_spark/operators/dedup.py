@@ -49,17 +49,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, shingle) pairs — distinct word n-grams per document."""
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(text.word_ngrams(F.col(text_col), n)).alias("shingle"),
-        )
-        .distinct()
-    )
-
-
 def hashed_shingle_table(
     df: DataFrame,
     id_col: str,
@@ -326,27 +315,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jacc") >= threshold)
         .select("id_a", "id_b", "jacc")
-    )
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, k: int | None = None
-) -> DataFrame:
-    """Wide MinHash signatures (id, m0..m{k-1}) — k universal-hash
-    permutation minima computed as k aggregate columns in a single pass over
-    the shingle table. Deterministic and reproducible in ANSI SQL."""
-    k = k or len(hashing.MINHASH_SEEDS)
-    sh = hashed_shingle_table(df, id_col, text_col, n, with_h28=True)
-    return _signatures_from(sh, k)
-
-
-def _signatures_from(hashed_sh: DataFrame, k: int | None = None) -> DataFrame:
-    k = k or len(hashing.MINHASH_SEEDS)
-    return hashed_sh.groupBy("id").agg(
-        *[
-            F.min(hashing.minhash_value(F.col("h28"), i)).alias(f"m{i}")
-            for i in range(k)
-        ]
     )
 
 
@@ -1221,66 +1189,6 @@ def containment_pairs(
         (F.col("n_common").cast("double") / F.col("n_b")).alias("containment"),
     )
     return a_in_b.unionByName(b_in_a).filter(F.col("containment") >= threshold)
-
-
-def dup_ngram_spans(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5
-) -> DataFrame:
-    """Per-document duplicated-substring statistics — the k-gram
-    approximation of exact substring dedup from Lee et al. 2022
-    ("Deduplicating Training Data Makes Language Models Better"): a k-gram
-    OCCURRENCE (multiplicity counts, unlike the distinct-shingle near-dup
-    family) is duplicated iff the same k-gram appears >= 2 times anywhere
-    in the corpus, including elsewhere in the same document. Returns
-    ``(id, n_grams, n_dup, dup_frac)`` per document with >= k tokens —
-    the memorization-risk profile that document-level Jaccard misses
-    (a boilerplate footer repeated across distinct articles).
-
-    Scale shape (the paper's suffix array does not distribute; this is the
-    standard shuffle-native reformulation):
-
-      1. doc table exchanged on ``id`` (skew-free) BEFORE tokenization so
-         the CPU-heavy ngram projection spreads across all cores — same
-         rationale as :func:`hashed_shingle_table`;
-      2. grams collapse to ``(id, h, c_loc)`` on that SAME partitioning
-         (group keys ⊇ id, no new exchange) — the corpus-wide stage below
-         moves one row per distinct gram per doc, not per occurrence;
-      3. global counts via groupBy(h) — map-side partial combine bounds
-         hot boilerplate grams before the exchange;
-      4. join (id,h,c_loc) ⋈ (h,c_glob) as a shuffle join so AQE
-         skew-splits naturally-hot grams (a window over partitionBy(h)
-         would be one exchange cheaper but un-splittable);
-      5. final groupBy(id) agg.
-
-    Grams are keyed by the PORTABLE 60-bit md5 hash (functions/hashing.py)
-    rather than xxhash64, so the ANSI-SQL oracle sees bit-identical keys —
-    and identical collisions, should one ever occur.
-    """
-    sess_par = df.sparkSession.sparkContext.defaultParallelism
-    grams = (
-        df.repartition(sess_par, F.col(id_col))
-        .select(
-            F.col(id_col).alias("id"),
-            F.explode(text.word_ngrams(F.col(text_col), k)).alias("g"),
-        )
-        .withColumn("h", hashing.portable_hash64(F.col("g")))
-        .drop("g")
-    )
-    per_doc = grams.groupBy("id", "h").agg(F.count(F.lit(1)).alias("c_loc"))
-    glob = per_doc.groupBy("h").agg(F.sum("c_loc").alias("c_glob"))
-    dup = F.when(F.col("c_glob") >= 2, F.col("c_loc")).otherwise(F.lit(0))
-    return (
-        per_doc.join(glob, "h")
-        .groupBy("id")
-        .agg(
-            F.sum("c_loc").alias("n_grams"),
-            F.sum(dup).alias("n_dup"),
-        )
-        .withColumn(
-            "dup_frac",
-            F.round(F.col("n_dup").cast("double") / F.col("n_grams"), 4),
-        )
-    )
 
 
 def prefix_filter_jaccard_pairs(

@@ -1,7 +1,9 @@
-"""Filter / predicate operators F1-F10 (SURVEY.md §2.2).
+"""Filter / predicate operators F3, F4 and F7-F9 (SURVEY.md §2.2).
 
 All are plain ``filter``/semi-join formulations so Catalyst pushes them into
 the scan (verify with ``.explain``: ``PushedFilters`` on the parquet scan).
+The mode (F2), quality-flag (F3) and missing-target (F5) predicates are
+inlined in ``plans/pipeline.py``, which takes their codes from here.
 """
 
 from __future__ import annotations
@@ -16,23 +18,6 @@ OPERATION_MODE_SAM = 4
 SIF_MODE_SAM = 3
 
 MISSING_TARGET_IDS = ("Missing", "missing")  # ref processors/OCO3SamProcessor.py:441-445
-
-
-def mode_filter(df: DataFrame, mode_col: str, modes: list[int]) -> DataFrame:
-    """F2: keep soundings in the given operation modes."""
-    return df.filter(F.col(mode_col).isin(modes))
-
-
-def quality_filter_co2(df: DataFrame, qf_col: str = "xco2_quality_flag") -> DataFrame:
-    """F3 (CO2): good soundings have flag == 0
-    (ref processors/OCO3SamProcessor.py:452)."""
-    return df.filter(F.col(qf_col) == 0)
-
-
-def quality_filter_sif(df: DataFrame, qf_col: str = "Quality_Flag") -> DataFrame:
-    """F3 (SIF): good soundings have flag in {0, 1}
-    (ref processors/OCO3SifProcessor.py:499-505)."""
-    return df.filter(F.col(qf_col).isin(0, 1))
 
 
 def drop_regions_without_good(
@@ -53,11 +38,6 @@ def pre_post_split(df: DataFrame, good: Column) -> tuple[DataFrame, DataFrame]:
     QF-filtered ('post') (ref main.py:374-418). Caller should ``persist``
     the input if both branches are consumed in one job."""
     return df, df.filter(good)
-
-
-def drop_missing_targets(df: DataFrame, target_col: str = "target_id") -> DataFrame:
-    """F5 (ref processors/OCO3SamProcessor.py:441-445)."""
-    return df.filter(~F.col(target_col).isin(*MISSING_TARGET_IDS))
 
 
 def drop_empty_slices(

@@ -1,16 +1,19 @@
-"""Join operators J1-J7 (SURVEY.md §2.3).
+"""Join operators J1-J3, J5 and J7 (SURVEY.md §2.3), plus the salted,
+as-of and binned interval-overlap joins.
 
 Physical-strategy stance for 100 TB:
   - dimension lookups broadcast (J1, J2's target side, J3's sequence side);
   - the footprint mask (J4) is not a join: it runs inside the grid kernel
     (operators/grid.grid_regions), bbox prefilter then exact geometry;
+  - the day-completeness hold-back (J6) is ``streaming.ingest.complete_days``
+    and catalog q15;
   - day-alignment (J5) and diff (J7) are full-outer equi-joins on low-card
     keys — map-side with AQE coalescing.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -259,34 +262,6 @@ def day_alignment(
         out = renamed if out is None else out.join(renamed, on=day_col, how="full_outer")
     assert out is not None
     return out
-
-
-def completeness_holdback(
-    available: DataFrame,
-    expected: DataFrame,
-    day_col: str = "day",
-    collection_col: str = "collection",
-    status_col: str = "status",
-) -> DataFrame:
-    """J6: a day is processable only when every expected collection is
-    PRESENT or EXPECTED_ABSENT (ref tools/deploy/run.py:257-305). Returns the
-    qualifying days. ``available``: (day, collection); ``expected``:
-    (collection) or (collection, gap ranges already resolved to status)."""
-    joined = expected.crossJoin(available.select(day_col).distinct()).join(
-        available.withColumn("__present", F.lit(1)),
-        on=[day_col, collection_col],
-        how="left",
-    )
-    per_day = joined.groupBy(day_col).agg(
-        F.min(
-            F.when(
-                F.col("__present").isNotNull()
-                | (F.col(status_col) == "EXPECTED_ABSENT"),
-                1,
-            ).otherwise(0)
-        ).alias("__ok")
-    )
-    return per_day.filter(F.col("__ok") == 1).select(day_col)
 
 
 def salted_join(

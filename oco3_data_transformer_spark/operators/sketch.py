@@ -228,16 +228,6 @@ def countmin_estimate(
     )
 
 
-def countmin_cells_sql(key_expr: str, depth: int, width: int) -> str:
-    """DuckDB fragment: LATERAL-unnestable list of (d, bucket) structs for a key."""
-    base = hashing.portable_hash28_sql(key_expr)
-    cells = ", ".join(
-        "{'d': %d, 'bucket': (%s) %% %d}" % (i, hashing.minhash_value_sql(base, i), width)
-        for i in range(depth)
-    )
-    return f"[{cells}]"
-
-
 def histogram_sketch(
     df: DataFrame,
     group_cols: list[str],

@@ -434,12 +434,6 @@ def _unpack_argb(flat: np.ndarray) -> np.ndarray:
     return out
 
 
-def _pack_argb(ch: np.ndarray) -> np.ndarray:
-    """(n, 4) uint8 [a, r, g, b] -> (n,) uint32."""
-    ch = ch.astype(np.uint32)
-    return (ch[:, 0] << 24) | (ch[:, 1] << 16) | (ch[:, 2] << 8) | ch[:, 3]
-
-
 # ---- inverse transforms ---------------------------------------------------
 
 

@@ -31,8 +31,8 @@ def get_spark(
     Defaults chosen for 100 TB-scale behavior, verified locally:
       - AQE on: runtime shuffle-partition coalescing + skew-join splitting
         replaces the reference's fixed thread pools and INTERP semaphore.
-      - Arrow on: the gridding kernel (applyInPandas) transfers columnar
-        batches, not pickled rows.
+      - Arrow on: the gridding kernel (repartition + mapInPandas) transfers
+        columnar batches, not pickled rows.
       - parquet zstd: matches the reference's Blosc-9/zlib-9 stance
         (ref writers/ZarrWriter.py:205) with a splittable columnar format.
       - codegen cache of 4096 classes: Spark's default LRU of 100 is smaller
@@ -58,9 +58,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python DataSource V2 scans (sources/granule_datasource.py) absorb
-        # scalar predicates into the decode task; off by default in 4.1
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.session.timeZone", "UTC")
         # Parquet TIMESTAMP(NANOS) (e.g. events.ts) is read as long nanos and

@@ -15,9 +15,7 @@ Spark-first design:
   - decode is ``mapInPandas`` with a pluggable per-format decoder; column
     projection (F1) is passed INTO the decoder so only requested variables
     are materialized (the reference's projection pushdown,
-    ref readers/GranuleReader.py:115-117) — with a DataSource V2 this would
-    be ``requiredSchema``; the pragmatic reader achieves the same pruning
-    one layer up.
+    ref readers/GranuleReader.py:115-117).
   - the NetCDF decoder is wheel-free end-to-end: classic CDF-1/CDF-2/CDF-5
     through sinks/containers.py, NetCDF4/HDF5 through the pure-numpy
     subset reader in sources/hdf5lite.py, whatever libraries are
@@ -33,7 +31,6 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 FILL_VALUE_DEFAULT = -999999.0  # normalized to NaN on decode (ref GranuleReader _FillValue)

@@ -153,8 +153,6 @@ def _mirror_to_zarr(cfg: IngestConfig, slices: DataFrame, mode: str) -> None:
     assembly and writes stay distributed (sinks/zarr_store.py). keep_first
     appends make checkpoint REPLAYS idempotent; 'replace' carries the
     late-granule repair."""
-    import os
-
     from ..sinks.zarr_store import append_zarr, export_zarr
 
     ids = slices.select("mission", "target_id", "qf").distinct().collect()
@@ -194,57 +192,54 @@ def make_batch_processor(
             poison.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
                 cfg.dead_letter_path
             )
-        good = good.withColumn("day", F.to_date("time")).persist()
-        try:
-            avail = good.select("day", "mission").distinct()
-            ready = complete_days(avail, cfg, spark)
-            ready_rows = good.join(F.broadcast(ready), "day", "left_semi")
-            if not ready_rows.limit(1).count():
-                return
-            slices = transform(ready_rows.drop("day"))
+        good = pipe._persist(good.withColumn("day", F.to_date("time")))
+        avail = good.select("day", "mission").distinct()
+        ready = complete_days(avail, cfg, spark)
+        ready_rows = good.join(F.broadcast(ready), "day", "left_semi")
+        if not ready_rows.limit(1).count():
+            return
+        slices = transform(ready_rows.drop("day"))
 
-            done = processed_days(spark, cfg)
-            slices = slices.withColumn("day", F.to_date("time")).persist()
-            fresh = slices.join(F.broadcast(done), "day", "left_anti").drop("day")
-            redo = slices.join(F.broadcast(done), "day", "left_semi").drop("day")
-            if fresh.limit(1).count():
-                store_ops.append(spark, fresh, cfg.store_path)
-            if redo.limit(1).count():  # late data for a processed day → repair
-                # merge, not upsert: the batch carries only the late granule's
-                # slices, so a partition wipe would drop the day's previously
-                # stored slices (other granules/targets) the producer never
-                # re-dropped.
-                store_ops.merge(spark, redo, cfg.store_path)
+        done = processed_days(spark, cfg)
+        slices = pipe._persist(slices.withColumn("day", F.to_date("time")))
+        fresh = slices.join(F.broadcast(done), "day", "left_anti").drop("day")
+        redo = slices.join(F.broadcast(done), "day", "left_semi").drop("day")
+        if fresh.limit(1).count():
+            store_ops.append(spark, fresh, cfg.store_path)
+        if redo.limit(1).count():  # late data for a processed day → repair
+            # merge, not upsert: the batch carries only the late granule's
+            # slices, so a partition wipe would drop the day's previously
+            # stored slices (other granules/targets) the producer never
+            # re-dropped.
+            store_ops.merge(spark, redo, cfg.store_path)
 
-            if cfg.zarr_mirror_path is not None:
-                _mirror_to_zarr(cfg, fresh, mode="keep_first")
-                _mirror_to_zarr(cfg, redo, mode="replace")
+        if cfg.zarr_mirror_path is not None:
+            _mirror_to_zarr(cfg, fresh, mode="keep_first")
+            _mirror_to_zarr(cfg, redo, mode="replace")
 
-            if cfg.rollup_path is not None:
-                # continuous aggregate: the batch knows its invalidation set
-                # row-locally (the days it just wrote); refresh recomputes
-                # only those months, partition-pruned — no full-store pass
-                # per micro-batch
-                store_ops.rollup_refresh(
-                    spark,
-                    cfg.store_path,
-                    cfg.rollup_path,
-                    store_ops.touched_days_of(slices.drop("day")),
-                )
-
-            ledger = (
-                good.join(F.broadcast(ready), "day", "left_semi")
-                .select("day", "mission", "granule").distinct()
-                .withColumn("batch_id", F.lit(batch_id))
-                .withColumn("processed_at", F.current_timestamp())
+        if cfg.rollup_path is not None:
+            # continuous aggregate: the batch knows its invalidation set
+            # row-locally (the days it just wrote); refresh recomputes
+            # only those months, partition-pruned — no full-store pass
+            # per micro-batch
+            store_ops.rollup_refresh(
+                spark,
+                cfg.store_path,
+                cfg.rollup_path,
+                store_ops.touched_days_of(slices.drop("day")),
             )
-            ledger.write.mode("append").parquet(cfg.ledger_path)
-            slices.unpersist()
-        finally:
-            good.unpersist()
+
+        ledger = (
+            good.join(F.broadcast(ready), "day", "left_semi")
+            .select("day", "mission", "granule").distinct()
+            .withColumn("batch_id", F.lit(batch_id))
+            .withColumn("processed_at", F.current_timestamp())
+        )
+        ledger.write.mode("append").parquet(cfg.ledger_path)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        # the rows the transform's pipelines cache live as long as the batch
+        # the rows this batch and its pipelines cache live as long as the batch,
+        # whether it returns or raises
         with pipe.cached_rows():
             process_batch(batch, batch_id)
 

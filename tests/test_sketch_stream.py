@@ -187,8 +187,8 @@ def test_streamed_histogram_equals_batch_and_quantiles_flow(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # Crash window between the two renames (round-4 judge finding #2): the live
 # path is briefly absent; a replay must NOT reset the cumulative sketch.
-# Method mirrors test_granule_datasource's crash test: reproduce the exact
-# on-disk state the crash leaves, restart, require bit-identical final state.
+# Method: reproduce the exact on-disk state the crash leaves, restart,
+# require bit-identical final state.
 # ---------------------------------------------------------------------------
 
 

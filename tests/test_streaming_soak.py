@@ -8,10 +8,11 @@ checkpoint each time. Done = the final store, rollup, and sketch estimate
 are equal to a one-shot BATCH run of the identical operators over the same
 raw rows — whole-DAG replay convergence, not per-sink recovery.
 
-The kill points compose with the per-sink crash tests (test_sketch_stream's
-kill-between-renames, test_granule_datasource's stream recovery): those
-prove each sink's own replay story; this proves the story holds when the
-sinks hang off ONE pipeline whose ledger commit is the last barrier.
+The kill points compose with the per-sink crash and replay tests
+(test_sketch_stream's kill-between-renames, test_dedup_stream's admission
+replay): those prove each sink's own replay story; this proves the story
+holds when the sinks hang off ONE pipeline whose ledger commit is the last
+barrier. A killed batch must also leave nothing cached behind.
 """
 
 from __future__ import annotations
@@ -142,6 +143,7 @@ def _drain(spark, cfg, transform, max_restarts=6):
 
 
 def test_whole_dag_replay_convergence(spark, cfg, tmp_path, monkeypatch):
+    spark.catalog.clearCache()
     armed: set[str] = set()
 
     def bomb_after(name, fn):
@@ -184,6 +186,8 @@ def test_whole_dag_replay_convergence(spark, cfg, tmp_path, monkeypatch):
     armed.add("merge")
     restarts = _drain(spark, cfg, killable_transform)
     assert restarts == 1 and not armed
+    # every batch, killed or not, released the rows it cached
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     # ---- sketch sink over the same drop dir: its own query + checkpoint,
     # killed (query stopped) between batches and resumed
