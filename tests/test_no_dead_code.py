@@ -56,14 +56,12 @@ def test_every_package_def_is_named_outside_its_def_line():
     for path in modules:
         lines = path.read_text().splitlines()
         for node in _module_defs(path):
-            own = _IDENT.findall(lines[node.lineno - 1]).count(node.name)
-            defs.append((path, node, own))
-    own_total: Counter[str] = Counter()
-    for _, node, own in defs:
-        own_total[node.name] += own
+            # a def line names itself; that does not count as a use
+            uses[node.name] -= _IDENT.findall(lines[node.lineno - 1]).count(node.name)
+            defs.append((path, node))
     dead = [
         f"{path.relative_to(PACKAGE_DIR)}:{node.lineno} {node.name}"
-        for path, node, _ in defs
-        if uses[node.name] <= own_total[node.name]
+        for path, node in defs
+        if uses[node.name] <= 0
     ]
     assert not dead, "named nowhere outside their def line:\n" + "\n".join(dead)
